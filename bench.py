@@ -270,6 +270,7 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 8)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
+    from tez_spark.memo import stats as memo_stats
     from tez_spark.session import get_spark
 
     spark = get_spark(app_name="tez_spark_bench", cpus=cpus,
@@ -497,6 +498,9 @@ def main() -> None:
                     "warm_submit_sec": warm_submit,
                     "artifact_build_sec": prewarm_build_sec,
                 },
+                # process-wide memo counters (tez_spark.memo): hits,
+                # misses, evictions and uncached builds
+                "memo": memo_stats(),
             }
         }
         print(json.dumps(diag, separators=(",", ":")), flush=True)

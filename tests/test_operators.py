@@ -819,6 +819,33 @@ def test_profile_columns_planted_nulls(spark):
     }
 
 
+def test_profile_columns_formatters_keyed_by_module(spark):
+    """ADVICE r17: the memoized expression families are keyed by each
+    formatter's module and qualname, so two module-level functions both
+    named `fmt` over the same column each get their own min/max."""
+    import types
+
+    from tez_spark.plans.queries_ext import profile_columns
+
+    def fmt_from(module_name: str, expr: str):
+        mod = types.ModuleType(module_name)
+        exec(
+            "from pyspark.sql import functions as F\n"
+            f"def fmt(c):\n    return {expr}\n",
+            mod.__dict__,
+        )
+        return mod.fmt
+
+    plain = fmt_from("profile_fmt_plain", 'c.cast("string")')
+    tagged = fmt_from("profile_fmt_tagged", 'F.concat(F.lit("#"), c.cast("string"))')
+    df = spark.createDataFrame([(1,), (3,)], "k long")
+    got = [
+        [(r.min_val, r.max_val) for r in profile_columns(df, [("k", f)]).collect()]
+        for f in (plain, tagged)
+    ]
+    assert got == [[("1", "3")], [("#1", "#3")]]
+
+
 def test_fan_out_bytes_per_task_caps_small_input_spread(spark):
     """r16 work-aware fan_out: with bytes_per_task set, a tiny file-backed
     input is NOT spread to the slot count — the target is

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -489,14 +490,25 @@ def test_read_parquet_cached_invalidates_on_file_change(spark, tmp_path):
     assert c.count() == 7
 
 
-def test_read_parquet_cached_missing_path_raises_spark_error(spark, tmp_path):
-    """ADVICE r16: a missing path must surface Spark's usual
+@pytest.mark.parametrize(
+    "reader",
+    [
+        "tez_spark.sources.catalog:read_parquet_cached",
+        "tez_spark.operators.similarity:_load_centroids",
+    ],
+)
+def test_read_parquet_cached_missing_path_raises_spark_error(
+    spark, tmp_path, reader
+):
+    """ADVICE r16/r17: a missing path must surface Spark's usual
     AnalysisException (the error callers of spark.read.parquet handle),
-    not a FileNotFoundError leaked from the fingerprint's os.stat."""
-    import pytest
+    not a FileNotFoundError leaked from the memo's fingerprint stat —
+    for the relation memo and the centroid memo alike."""
+    import importlib
+
     from pyspark.errors import AnalysisException
 
-    from tez_spark.sources.catalog import read_parquet_cached
-
+    mod, fn = reader.split(":")
+    read = getattr(importlib.import_module(mod), fn)
     with pytest.raises(AnalysisException):
-        read_parquet_cached(spark, str(tmp_path / "never_written.parquet"))
+        read(spark, str(tmp_path / "never_written.parquet"))

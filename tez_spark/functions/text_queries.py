@@ -688,29 +688,6 @@ def token_gram_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "pos", X.gram_hash("gram").alias("g"))
 
 
-def token_gram_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The token-gram instance stream shared by text_dup_spans and
-    exactsubstr_spans. Posture "dupset" (shipped, r14 — the char-side
-    decision applied symmetrically: the instance table is one row per
-    corpus TOKEN position, the same multi-PB-at-100TB class): the
-    un-persisted map-side plan; the session-memoized artifact is
-    dup_token_gram_set below. Posture "instances" (r13 shape, retained
-    for the A/B and small-scale use): the session-memoized persisted
-    explode, keyed on the documents fingerprint and prewarmed by
-    prewarm_corpus_artifacts."""
-    if GRAM_POSTURE != "instances":
-        return token_gram_plan(spark, sf_dir)
-    from tez_spark.operators.core import shared_artifact
-    from tez_spark.sources.catalog import path_fingerprint
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (
-        "token_grams", os.path.abspath(sf_dir), path_fingerprint(path),
-        DUP_SPAN_L,
-    )
-    return shared_artifact(spark, key, lambda: token_gram_plan(spark, sf_dir))
-
-
 def dup_token_gram_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized duplicated-token-gram set (g: 16-hex md5
     prefix, one row per gram appearing >= 2 times) — the persisted
@@ -720,24 +697,21 @@ def dup_token_gram_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded where the instance table it replaces is corpus-token-
     sized; prewarmed by prewarm_corpus_artifacts."""
     from tez_spark.operators.core import shared_artifact
-    from tez_spark.sources.catalog import path_fingerprint
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (
-        "dup_token_grams", os.path.abspath(sf_dir), path_fingerprint(path),
-        DUP_SPAN_L,
-    )
+    key = ("dup_token_grams", os.path.abspath(sf_dir), DUP_SPAN_L)
 
     def build() -> DataFrame:
         return (
-            token_gram_table(spark, sf_dir)
+            token_gram_plan(spark, sf_dir)
             .groupBy("g")
             .agg(F.count(F.lit(1)).alias("_c"))
             .filter(F.col("_c") >= 2)
             .select("g")
         )
 
-    return shared_artifact(spark, key, build)
+    return shared_artifact(
+        spark, key, build, [os.path.join(sf_dir, "documents.parquet")]
+    )
 
 
 def q_text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -751,7 +725,7 @@ def q_text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity) and text_winnow (sampled fingerprints) with the
     verbatim-repetition dimension neither captures.
 
-    Plan (r14 "dupset" posture — see token_gram_table): the instance
+    Plan (r14 "dupset" posture — see token_gram_plan): the instance
     stream recomputes map-side (one codegen explode), and the
     duplicated-gram set is the session-memoized dup_token_gram_set
     artifact (its build runs the corpus-wide gram-frequency
@@ -765,7 +739,7 @@ def q_text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings through both exchanges; a 64-bit prefix collision would
     need ~2^32 distinct spans per false dup — at that scale switch to
     the full digest, not raw strings."""
-    grams = token_gram_table(spark, sf_dir).select("doc_id", "g")
+    grams = token_gram_plan(spark, sf_dir).select("doc_id", "g")
     dup = dup_token_gram_set(spark, sf_dir).withColumn("_m", F.lit(1))
     per_doc = (
         grams.join(dup, "g", "left")
@@ -821,7 +795,7 @@ def q_exactsubstr_spans(
     span_end, n_windows) with 0-based token positions, end exclusive.
 
     Plan (default, the skew-safe form — VERDICT r12 What's-wrong #1;
-    r14 "dupset" posture): the token_gram_table instance stream
+    r14 "dupset" posture): the token_gram_plan instance stream
     (map-side recomputed posexplode over the shared gram_windows
     kernel, shared with text_dup_spans; grams travel as 16-hex md5
     prefixes), and the session-memoized dup_token_gram_set — whose
@@ -849,7 +823,7 @@ def q_exactsubstr_spans(
     from pyspark.sql import Window
 
     L = DUP_SPAN_L
-    grams = token_gram_table(spark, sf_dir)
+    grams = token_gram_plan(spark, sf_dir)
     if variant == "window":
         dup = grams.withColumn(
             "_c", F.count(F.lit(1)).over(Window.partitionBy("g"))
@@ -859,7 +833,7 @@ def q_exactsubstr_spans(
     else:
         # r14 "dupset" posture: the memoized dup-gram set replaces the
         # in-query frequency agg (built once at artifact build — see
-        # token_gram_table / PERF.md r14)
+        # token_gram_plan / PERF.md r14)
         dup = grams.join(
             dup_token_gram_set(spark, sf_dir), "g", "left_semi"
         ).select("doc_id", F.col("pos").cast("long").alias("pos"))
@@ -934,25 +908,15 @@ ORACLE["exactsubstr_spans"] = f"""
 CHAR_SPAN_L = 50  # Lee et al. (ACL 2022) §4.1: 50-char dedup threshold
 
 
-# Storage posture of the gram-instance artifact family (VERDICT r13
-# item 2, decided for the char side and applied symmetrically to the
-# token side — both instance tables are one row per corpus position
-# (~20–25 bytes each): linear, the same complexity class as the
-# reference algorithm's ~8N suffix array, but a multi-PB distributed
-# cache at the 100TB target. Postures A/B'd at 1×/3×/10×
-# (tools/gram_posture_ab.py, decision recorded in PERF.md r14):
-#   "instances" — persist the full (doc_id, pos, g) explode (r13 shape);
-#   "dupset"    — persist ONLY the duplicated-gram set (count >= 2,
-#                 dup-content-bounded, single-column) and recompute
-#                 instance positions map-side in each consumer (one
-#                 extra codegen explode per query, zero persisted
-#                 instance rows).
-GRAM_POSTURE = os.environ.get(
-    "TEZ_SPARK_GRAM_POSTURE",
-    os.environ.get("TEZ_SPARK_CHAR_GRAM_POSTURE", "dupset"),
-)
-
-
+# Storage posture of the gram-instance family (VERDICT r13 item 2,
+# decided for the char side and applied symmetrically to the token side;
+# the 1×/3×/10× A/B is recorded in PERF.md r14): an instance table is one
+# row per corpus position (~20–25 bytes each) — linear, the same
+# complexity class as the reference algorithm's ~8N suffix array, but a
+# multi-PB distributed cache at the 100TB target. So only the
+# duplicated-gram set (count >= 2, dup-content-bounded, single-column) is
+# persisted, and instance positions recompute map-side in each consumer
+# (one extra codegen explode per query, zero persisted instance rows).
 def char_windows(df: DataFrame, L: int = CHAR_SPAN_L) -> DataFrame:
     """Stride-1 char-window gram stream (doc_id, pos, g) of an arbitrary
     (doc_id, text) frame — the shared kernel of char_gram_plan and the
@@ -978,30 +942,9 @@ def char_gram_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tez_spark.operators.core import fan_out
 
     docs = load_table(spark, sf_dir, "documents")
-    # fan_out BEFORE the stride-1 explode (see token_gram_table):
+    # fan_out BEFORE the stride-1 explode (see token_gram_plan):
     # 1-partition plan = single-task map stages in every consumer
     return char_windows(fan_out(docs.select("doc_id", "text")))
-
-
-def char_gram_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The char-gram instance stream consumers read. Posture "dupset"
-    (shipped, r14 A/B): the un-persisted map-side plan — zero persisted
-    instance rows; the session-memoized artifact is dup_char_gram_set
-    below. Posture "instances" (r13 shape, retained for the A/B and
-    small-scale use): the session-memoized persisted explode (the
-    shingle_table precedent), keyed on the documents fingerprint and
-    prewarmed by prewarm_corpus_artifacts."""
-    if GRAM_POSTURE != "instances":
-        return char_gram_plan(spark, sf_dir)
-    from tez_spark.operators.core import shared_artifact
-    from tez_spark.sources.catalog import path_fingerprint
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (
-        "char_grams", os.path.abspath(sf_dir), path_fingerprint(path),
-        CHAR_SPAN_L,
-    )
-    return shared_artifact(spark, key, lambda: char_gram_plan(spark, sf_dir))
 
 
 def dup_char_gram_set(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1015,24 +958,21 @@ def dup_char_gram_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer); prewarmed by prewarm_corpus_artifacts with the build cost
     stamped in the bench diagnostics."""
     from tez_spark.operators.core import shared_artifact
-    from tez_spark.sources.catalog import path_fingerprint
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = (
-        "dup_char_grams", os.path.abspath(sf_dir), path_fingerprint(path),
-        CHAR_SPAN_L,
-    )
+    key = ("dup_char_grams", os.path.abspath(sf_dir), CHAR_SPAN_L)
 
     def build() -> DataFrame:
         return (
-            char_gram_table(spark, sf_dir)
+            char_gram_plan(spark, sf_dir)
             .groupBy("g")
             .agg(F.count(F.lit(1)).alias("_c"))
             .filter(F.col("_c") >= 2)
             .select("g")
         )
 
-    return shared_artifact(spark, key, build)
+    return shared_artifact(
+        spark, key, build, [os.path.join(sf_dir, "documents.parquet")]
+    )
 
 
 def char_span_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1045,19 +985,19 @@ def char_span_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     work is the complement splice over an already-extracted span
     table."""
     from tez_spark.operators.core import shared_artifact
-    from tez_spark.sources.catalog import path_fingerprint
 
     L = CHAR_SPAN_L
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = ("char_spans", os.path.abspath(sf_dir), path_fingerprint(path), L)
+    key = ("char_spans", os.path.abspath(sf_dir), L)
 
     def build() -> DataFrame:
-        dup = char_gram_table(spark, sf_dir).join(
+        dup = char_gram_plan(spark, sf_dir).join(
             dup_char_gram_set(spark, sf_dir), "g", "left_semi"
         ).select("doc_id", F.col("pos").cast("long").alias("pos"))
         return _merge_dup_spans(dup, L)
 
-    return shared_artifact(spark, key, build)
+    return shared_artifact(
+        spark, key, build, [os.path.join(sf_dir, "documents.parquet")]
+    )
 
 
 def q_exactsubstr_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1089,7 +1029,7 @@ def q_exactsubstr_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the DuckDB oracle keeps its own md5 formulation of the same
     truth) and md5-of-1.4M-windows was ~2.8 s of the 7.2; and the
     duplicated-gram set is the session-memoized dup_char_gram_set
-    artifact (r14 "dupset" posture, A/B'd in tools/gram_posture_ab.py:
+    artifact (r14 "dupset" posture, A/B'd in PERF.md r14:
     persisting the dup-content-bounded set instead of the corpus-
     character-sized instance table drops the 100TB cache from multi-PB
     to boilerplate-sized; the instance stream is recomputed map-side —
@@ -1098,7 +1038,7 @@ def q_exactsubstr_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     stamps the build cost). Same 64-bit collision margin as gram_hash:
     a false dup needs ~2^32 distinct windows."""
     L = CHAR_SPAN_L
-    grams = char_gram_table(spark, sf_dir)
+    grams = char_gram_plan(spark, sf_dir)
     dup = grams.join(dup_char_gram_set(spark, sf_dir), "g", "left_semi").select(
         "doc_id", F.col("pos").cast("long").alias("pos")
     )

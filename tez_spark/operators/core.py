@@ -17,6 +17,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tez_spark.memo import drop, memo
+
 ColumnOrName = Column | str
 
 
@@ -37,16 +39,17 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass
+
+
 def release_caches() -> None:
     """Unpersist every tracked intermediate (call between query runs)."""
     while _TRACKED_CACHES:
-        try:
-            _TRACKED_CACHES.pop().unpersist()
-        except Exception:
-            pass
-
-
-_EXPR_MEMO = None  # WeakKeyDictionary[py4j gateway -> dict[key -> columns]]
+        _unpersist(_TRACKED_CACHES.pop())
 
 
 def jvm_expr_memo(key: str, build):
@@ -60,30 +63,17 @@ def jvm_expr_memo(key: str, build):
     Column in many DataFrames is ordinary Spark usage), so a family
     whose shape is a module constant (the minhash hash family, the
     simhash bit fold, the LSH band array) can build once per JVM and be
-    reused by every subsequent query build. Keyed WEAKLY on the py4j
-    gateway: a restarted JVM gets a fresh dict, and stale JVM handles
-    can never leak across gateways. This caches no data and no plan —
-    execution still computes everything from the parquet inputs."""
-    import weakref
-
+    reused by every subsequent query build. Scoped on the py4j gateway:
+    a restarted JVM starts empty, and stale JVM handles can never leak
+    across gateways. This caches no data and no plan — execution still
+    computes everything from the parquet inputs."""
     from pyspark import SparkContext
 
-    global _EXPR_MEMO
-    if _EXPR_MEMO is None:
-        _EXPR_MEMO = weakref.WeakKeyDictionary()
     gw = SparkContext._gateway
     if gw is None:
         # no JVM yet — the build() itself would fail too; let it try
         return build()
-    try:
-        per_gw = _EXPR_MEMO.get(gw)
-        if per_gw is None:
-            per_gw = _EXPR_MEMO[gw] = {}
-    except TypeError:
-        return build()  # un-weakref-able gateway: skip the cache
-    if key not in per_gw:
-        per_gw[key] = build()
-    return per_gw[key]
+    return memo(gw, ("expr", key), build)
 
 
 # Shared corpus-derived artifacts (the shingle table, the minhash band
@@ -95,68 +85,38 @@ def jvm_expr_memo(key: str, build):
 # shingle+signature+band pipeline — the duplicated build was most of its
 # 5–20s). This is exactly Tez's session reuse (TezClient keeps the AM warm
 # so successive DAGs share container state, TezClient.java:214); here the
-# shared state is a persisted DataFrame. Keys embed the fixture-path
-# fingerprint (size+mtime of every data file), so a regenerated fixture
-# builds a fresh artifact rather than silently reading stale cache.
+# shared state is a persisted DataFrame. The memo fingerprints the
+# artifact's input paths, so a regenerated fixture builds a fresh
+# artifact (unpersisting the superseded one) rather than silently
+# reading stale cache.
 # At 100TB the same pattern is a persisted (or parquet-materialized)
 # intermediate table: persist() defaults to MEMORY_AND_DISK, so an
 # artifact larger than executor memory degrades to local-disk reads, not
 # OOM; a multi-job pipeline would write it once with write_bucketed.
-_SHARED_ARTIFACTS = None  # WeakKeyDictionary[SparkSession, dict[key, DataFrame]]
 
 
-def shared_artifact(spark, key: tuple, builder) -> DataFrame:
+def shared_artifact(spark, key: tuple, builder, inputs=()) -> DataFrame:
     """Session-scoped memo of a persisted DataFrame artifact.
 
-    `key` must be a hashable tuple that fully determines the artifact
-    (artifact name, fixture path, path fingerprint, params). `builder`
-    is a zero-arg callable returning the un-persisted plan; it runs at
-    most once per (session, key)."""
-    global _SHARED_ARTIFACTS
-    if _SHARED_ARTIFACTS is None:
-        import weakref
-
-        _SHARED_ARTIFACTS = weakref.WeakKeyDictionary()
-    try:
-        cache = _SHARED_ARTIFACTS.setdefault(spark, {})
-    except TypeError:
-        return tracked_persist(builder())  # un-weakref-able session
-    if key not in cache:
-        # Evict superseded builds of the SAME artifact: same name +
-        # sf_dir AND same params, different fingerprint — a regenerated
-        # fixture would otherwise leave the stale persisted copy pinned
-        # in executor memory until session death. Key layout is
-        # (name, sf_dir, fingerprint, *params); matching on params too
-        # keeps two param variants over the SAME unchanged fixture (e.g.
-        # shingle n=3 vs n=4) coexisting instead of thrashing
-        # rebuild/unpersist on alternating calls (ADVICE r5).
-        for old in [
-            k
-            for k in cache
-            if k[:2] == key[:2] and k[3:] == key[3:] and k != key
-        ]:
-            try:
-                cache.pop(old).unpersist()
-            except Exception:
-                pass
-        cache[key] = builder().persist()
-    return cache[key]
+    `key` is a hashable tuple naming the artifact (name, fixture path,
+    params); `inputs` are the paths it is computed from. `builder` is a
+    zero-arg callable returning the un-persisted plan; it runs at most
+    once per (session, key, generation of inputs)."""
+    return memo(
+        spark,
+        ("artifact", *key),
+        lambda: builder().persist(),
+        inputs,
+        on_evict=_unpersist,
+    )
 
 
 def release_shared(spark=None) -> None:
-    """Unpersist memoized shared artifacts — for tests and explicit
-    session cleanup; registry runs deliberately do NOT call this."""
-    global _SHARED_ARTIFACTS
-    if _SHARED_ARTIFACTS is None:
-        return
-    sessions = [spark] if spark is not None else list(_SHARED_ARTIFACTS.keys())
-    for s in sessions:
-        for df in _SHARED_ARTIFACTS.get(s, {}).values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        _SHARED_ARTIFACTS.pop(s, None)
+    """Unpersist memoized shared artifacts of `spark` (every session when
+    None) — for tests and explicit session cleanup; registry runs
+    deliberately do NOT call this."""
+    for df in drop("artifact", *([] if spark is None else [spark])):
+        _unpersist(df)
 
 
 # ---------------------------------------------------------------------------

@@ -87,14 +87,12 @@ def shingle_table(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     import os
 
     from tez_spark.operators.core import shared_artifact
-    from tez_spark.sources.catalog import path_fingerprint
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = ("shingles", os.path.abspath(sf_dir), path_fingerprint(path), n)
     return shared_artifact(
         spark,
-        key,
+        ("shingles", os.path.abspath(sf_dir), n),
         lambda: shingles(load_table(spark, sf_dir, "documents"), "doc_id", "text", n=n),
+        [os.path.join(sf_dir, "documents.parquet")],
     )
 
 
@@ -105,14 +103,12 @@ def winnow_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from tez_spark.functions.text_queries import winnow_fingerprints
     from tez_spark.operators.core import shared_artifact
-    from tez_spark.sources.catalog import path_fingerprint
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    key = ("winnow_fps", os.path.abspath(sf_dir), path_fingerprint(path))
     return shared_artifact(
         spark,
-        key,
+        ("winnow_fps", os.path.abspath(sf_dir)),
         lambda: winnow_fingerprints(load_table(spark, sf_dir, "documents")),
+        [os.path.join(sf_dir, "documents.parquet")],
     )
 
 
@@ -441,20 +437,19 @@ def lsh_candidate_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from tez_spark.operators.core import shared_artifact
-    from tez_spark.sources.catalog import path_fingerprint
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    fp = path_fingerprint(path)
+    inputs = [os.path.join(sf_dir, "documents.parquet")]
     sf_abs = os.path.abspath(sf_dir)
 
     def build_banded() -> DataFrame:
         return band_signatures(minhash_signatures(shingle_table(spark, sf_dir)))
 
-    banded = shared_artifact(spark, ("mh_bands", sf_abs, fp), build_banded)
+    banded = shared_artifact(spark, ("mh_bands", sf_abs), build_banded, inputs)
     return shared_artifact(
         spark,
-        ("mh_candidates", sf_abs, fp),
+        ("mh_candidates", sf_abs),
         lambda: candidates_from_bands(banded),
+        inputs,
     )
 
 
@@ -644,10 +639,8 @@ def corpus_artifacts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
     import os
 
     from tez_spark.operators.core import shared_artifact
-    from tez_spark.sources.catalog import path_fingerprint
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    fp = path_fingerprint(path)
+    inputs = [os.path.join(sf_dir, "documents.parquet")]
     sf_abs = os.path.abspath(sf_dir)
 
     def corpus_docs() -> DataFrame:
@@ -657,8 +650,9 @@ def corpus_artifacts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
 
     sh = shared_artifact(
         spark,
-        ("corpus_shingles", sf_abs, fp),
+        ("corpus_shingles", sf_abs),
         lambda: shingles(corpus_docs(), "doc_id", "text", n=3),
+        inputs,
     )
     # The band table is memoized PRE-PARTITIONED on the band-join key:
     # the persisted partitioning satisfies the equijoin's clustering
@@ -668,8 +662,9 @@ def corpus_artifacts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
     # signature store bucketed by (band, sig)).
     bands = shared_artifact(
         spark,
-        ("corpus_bands", sf_abs, fp),
+        ("corpus_bands", sf_abs),
         lambda: band_signatures(minhash_signatures(sh)).repartition("band", "sig"),
+        inputs,
     )
     return sh, bands
 
@@ -1653,17 +1648,12 @@ def prewarm_corpus_artifacts(spark: SparkSession, sf_dir: str) -> float:
     lsh_candidate_table(spark, sf_dir).count()
     winnow_table(spark, sf_dir).count()
     corpus_artifacts(spark, sf_dir)[1].count()
-    # r13/r14: the ExactSubstr artifacts. Under the shipped "dupset"
-    # posture the persisted artifacts are the dup-gram SETS — char and
-    # token — plus the span table (instance rows recompute map-side;
-    # counting the un-persisted gram plans here would explode the
-    # corpus for nothing); under the A/B's "instances" posture they
-    # are the full gram instance tables.
+    # r13/r14: the ExactSubstr artifacts. The persisted artifacts are
+    # the dup-gram SETS — char and token — plus the span table (instance
+    # rows recompute map-side; counting the un-persisted gram plans here
+    # would explode the corpus for nothing).
     from tez_spark.functions import text_queries as _tq
 
-    if _tq.GRAM_POSTURE == "instances":
-        _tq.char_gram_table(spark, sf_dir).count()
-        _tq.token_gram_table(spark, sf_dir).count()
     _tq.dup_char_gram_set(spark, sf_dir).count()
     _tq.dup_token_gram_set(spark, sf_dir).count()
     _tq.char_span_table(spark, sf_dir).count()

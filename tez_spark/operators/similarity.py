@@ -1472,37 +1472,34 @@ def _probe_exact_scored(
     return out
 
 
-_CENTROID_MEMO: dict[tuple, "np.ndarray"] = {}
-
-
 def _load_centroids(spark: SparkSession, path: str) -> "np.ndarray":
-    """Session-process memo of an index's dense centroid matrix, keyed
-    by absolute index path PLUS the centroid files' fingerprint
+    """Process memo of an index's dense centroid matrix, keyed by
+    absolute index path with the centroid files as memo inputs
     (ADVICE r16: ensure_ivf_index's published paths are immutable, but
     maintain_ann reads the FIXED path store_dir/index — an in-process
     rebuild at that path would otherwise silently serve stale centroids
     while the fingerprint-keyed vectors read refreshed, splitting probe
     and append across two index generations). The fingerprint stat walk
     is ~µs against the collect job it saves; a changed fingerprint
-    evicts the superseded entry. The memo is a few hundred KB per
-    index; nothing reads centroids before the _COMPLETE gate, so a
-    partial build can never populate it."""
+    replaces the superseded entry, and a missing index reads uncached so
+    Spark raises its own AnalysisException. The memo is a few hundred
+    KB per index; nothing reads centroids before the _COMPLETE gate, so
+    a partial build can never populate it."""
     import os as _os
 
-    from tez_spark.sources.catalog import path_fingerprint
+    from tez_spark.memo import memo
 
-    abspath = _os.path.abspath(path)
-    key = (abspath, path_fingerprint(_os.path.join(abspath, "centroids")))
-    Cn = _CENTROID_MEMO.get(key)
-    if Cn is None:
+    def build() -> "np.ndarray":
         cent = spark.read.parquet(path + "/centroids").collect()
         Cn = np.zeros((len(cent), len(cent[0].centroid)))
         for r in cent:
             Cn[r.cell] = r.centroid
-        for old in [k for k in _CENTROID_MEMO if k[0] == abspath]:
-            del _CENTROID_MEMO[old]
-        _CENTROID_MEMO[key] = Cn
-    return Cn
+        return Cn
+
+    abspath = _os.path.abspath(path)
+    return memo(
+        None, ("centroids", abspath), build, [_os.path.join(abspath, "centroids")]
+    )
 
 
 def publish_build_dir(scratch: str, idx: str, max_attempts: int = 5) -> None:
@@ -1557,7 +1554,7 @@ def ensure_ivf_index(corpus: DataFrame, sf_dir: str) -> str:
     import tempfile
     import uuid
 
-    from tez_spark.sources.catalog import path_fingerprint
+    from tez_spark.memo import path_fingerprint
 
     fp = path_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     tag = hashlib.md5(

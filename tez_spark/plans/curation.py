@@ -848,12 +848,12 @@ def q_decontaminate_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan — the exactsubstr_chars shape (agg → SMALL filtered gram set →
     semi probe), not decontaminate_ngram's distinct-the-train-side:
-    the char_gram_table instance stream (r14 "dupset" posture: a pure
+    the char_gram_plan instance stream (r14 "dupset" posture: a pure
     map-side codegen explode recomputed per consumer — the agg side
     reads the full corpus's windows, the probe side only HOLDOUT docs'
     because the is_hold predicate derives from doc_id and pushes below
     the explode; zero persisted instance rows, see
-    tools/gram_posture_ab.py — grams are query-internal xxhash64,
+    PERF.md r14 — grams are query-internal xxhash64,
     never reaching output; the oracle keeps its own md5 formulation of
     the same truth), the split flag derived map-side from doc_id, then ONE
     partial-agg'd per-gram aggregation of the two split-presence flags.
@@ -872,9 +872,9 @@ def q_decontaminate_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single pass. The report is HOLDOUT-scaled, so it keeps the
     parallel range sort (orderBy), not bounded_sort's single-partition
     funnel. Same 64-bit collision margin as the gram family."""
-    from tez_spark.functions.text_queries import char_gram_table
+    from tez_spark.functions.text_queries import char_gram_plan
 
-    grams = char_gram_table(spark, sf_dir).select("doc_id", "g")
+    grams = char_gram_plan(spark, sf_dir).select("doc_id", "g")
     h = F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8"))
     grams = grams.withColumn("is_hold", F.substring(h, 1, 2) >= "e6")
     shared_g = (

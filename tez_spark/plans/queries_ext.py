@@ -991,8 +991,10 @@ def profile_columns(df: DataFrame, cols) -> DataFrame:
         )
         return aggs, pack, stack
 
+    # formatters are keyed by module + qualname: two `fmt` functions from
+    # different modules must not share a family (ADVICE r17)
     memo_key = "profile_columns:" + ",".join(
-        f"{name}:{fmt.__name__}" for name, fmt in cols
+        f"{name}:{fmt.__module__}.{fmt.__qualname__}" for name, fmt in cols
     )
     aggs, pack, stack = jvm_expr_memo(memo_key, _families)
 

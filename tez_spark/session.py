@@ -28,6 +28,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from tez_spark.memo import memo
+
 # Runtime-settable confs every entry point applies even when handed a
 # foreign SparkSession (e.g. the verify driver's): determinism (UTC) and
 # Arrow for the Pandas-UDF slow path.
@@ -68,38 +70,25 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-_CONFS_APPLIED: "weakref.WeakSet" = None  # type: ignore[assignment]
-
-
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable determinism/perf confs to an existing session.
 
     Memoized per live session: load_table calls this on every scan (it
     must — the correctness driver hands queries a foreign session), which
-    without the cache costs ~10 Py4J round-trips per table load, ~50 per
-    multi-table query build. The WeakSet drops stopped sessions, so a
+    without the memo costs ~10 Py4J round-trips per table load, ~50 per
+    multi-table query build. The memo holds the session weakly, so a
     restarted session at a recycled address is re-applied."""
-    global _CONFS_APPLIED
-    if _CONFS_APPLIED is None:
-        import weakref
+    def apply() -> bool:
+        for k, v in RUNTIME_CONFS.items():
+            try:
+                spark.conf.set(k, v)
+            except Exception:
+                # Some confs may be static in exotic deployments; never
+                # fail a query over a tuning knob.
+                pass
+        return True
 
-        _CONFS_APPLIED = weakref.WeakSet()
-    try:
-        if spark in _CONFS_APPLIED:
-            return spark
-    except TypeError:
-        pass  # un-weakref-able session implementation: fall through, no cache
-    for k, v in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            # Some confs may be static in exotic deployments; never fail a
-            # query over a tuning knob.
-            pass
-    try:
-        _CONFS_APPLIED.add(spark)
-    except TypeError:
-        pass
+    memo(spark, ("confs",), apply)
     return spark
 
 

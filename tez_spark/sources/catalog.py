@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tez_spark.memo import memo
 from tez_spark.session import apply_runtime_confs
 
 TABLES = (
@@ -58,46 +59,6 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-def path_fingerprint(path: str) -> tuple:
-    """(size, mtime_ns) fingerprint of a parquet file or directory tree.
-
-    Cache keys embed this so a fixture regenerated mid-session (ADVICE r4:
-    the file-listing snapshot went stale) invalidates the cached relation /
-    shared artifact instead of silently reading deleted or stale files.
-    A stat walk costs ~µs against the ~70ms relation analysis it saves."""
-    if os.path.isdir(path):
-        # full RELATIVE paths, sorted: os.walk's subdirectory order is
-        # scandir-dependent (unstable across rewrites), and basenames
-        # alone would miss a part file moving between partitions.
-        items = []
-        for root, _, files in os.walk(path):
-            for f in files:
-                full = os.path.join(root, f)
-                st = os.stat(full)
-                items.append(
-                    (os.path.relpath(full, path), st.st_size, st.st_mtime_ns)
-                )
-        items.sort()
-        return ("dir", tuple(items))
-    st = os.stat(path)
-    return ("file", st.st_size, st.st_mtime_ns)
-
-
-def _table_cache(spark: SparkSession) -> dict | None:
-    global _TABLE_CACHE
-    if _TABLE_CACHE is None:
-        import weakref
-
-        _TABLE_CACHE = weakref.WeakKeyDictionary()
-    try:
-        return _TABLE_CACHE.setdefault(spark, {})
-    except TypeError:
-        return None  # un-weakref-able session: skip caching
-
-
-_TABLE_CACHE = None
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Columnar parquet scan: filters/projections
     applied downstream reach the scan (PushedFilters/ReadSchema).
@@ -106,31 +67,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     does for resolved relations): a fresh spark.read.parquet costs a
     footer read + relation analysis (~70ms warm) on EVERY query build —
     ~300 loads across a bench run. DataFrames are immutable plans, so
-    reuse is safe; the cache key embeds the file fingerprint
-    (path_fingerprint), so a fixture regenerated mid-session invalidates
-    the entry instead of silently reading the stale file-listing
-    snapshot (ADVICE r4). The WeakKeyDictionary drops the cache with its
-    session."""
+    reuse is safe; the memo fingerprints the file (size+mtime walk), so
+    a fixture regenerated mid-session invalidates the entry instead of
+    silently reading the stale file-listing snapshot (ADVICE r4). The
+    memo drops the entry with its session."""
     # includes nanosAsLong: a TIMESTAMP(NANOS) events.ts (one historical
     # fixture encoding) surfaces as int64 instead of a reader error;
     # normalize_event_ts then restores TIMESTAMP.
     apply_runtime_confs(spark)
-    cache = _table_cache(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (os.path.abspath(sf_dir), name, path_fingerprint(path))
-    if cache is not None and key in cache:
-        return cache[key]
-    df = spark.read.parquet(path)
-    if name == "events":
-        df = normalize_event_ts(df)
-    if cache is not None:
-        # evict superseded fingerprints for this (sf_dir, name) — a
-        # regenerated fixture otherwise leaks one stale DataFrame entry
-        # per regeneration until session death (ADVICE r5)
-        for old in [k for k in cache if k[:2] == key[:2] and k != key]:
-            del cache[old]
-        cache[key] = df
-    return df
+
+    def read() -> DataFrame:
+        df = spark.read.parquet(path)
+        return normalize_event_ts(df) if name == "events" else df
+
+    return memo(spark, ("table", os.path.abspath(sf_dir), name), read, [path])
 
 
 def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
@@ -141,31 +92,17 @@ def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     every query BUILD; the fingerprint key (size+mtime_ns walk) re-reads
     the moment any file under the path changes, so an appended or
     compacted store can never serve a stale file listing (r16).
-    Granularity caveat: a rewrite preserving every file's size AND
-    mtime_ns would go unnoticed — no store here mutates that way (they
-    append subdirs or rename-swap, both of which change the walk).
 
     A missing or mid-delete path falls through to an UNCACHED read so
     Spark surfaces its usual AnalysisException instead of this helper
     leaking FileNotFoundError from os.stat (ADVICE r16)."""
     apply_runtime_confs(spark)
-    cache = _table_cache(spark)
-    try:
-        fp = path_fingerprint(path)
-    except OSError:
-        return spark.read.parquet(path)
-    key = ("rawpath", os.path.abspath(path), fp)
-    if cache is not None and key in cache:
-        return cache[key]
-    df = spark.read.parquet(path)
-    if cache is not None:
-        for old in [k for k in cache if k[:2] == key[:2] and k != key]:
-            del cache[old]
-        cache[key] = df
-    return df
-
-
-_ROW_COUNT_CACHE: dict[tuple, int] = {}
+    return memo(
+        spark,
+        ("rawpath", os.path.abspath(path)),
+        lambda: spark.read.parquet(path),
+        [path],
+    )
 
 
 def table_row_count(sf_dir: str, name: str) -> int:
@@ -178,25 +115,18 @@ def table_row_count(sf_dir: str, name: str) -> int:
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (os.path.abspath(sf_dir), name, path_fingerprint(path))
-    if key in _ROW_COUNT_CACHE:
-        return _ROW_COUNT_CACHE[key]
-    if os.path.isdir(path):
+
+    def count() -> int:
+        if not os.path.isdir(path):
+            return pq.read_metadata(path).num_rows
         n = 0
         for root, _, files in os.walk(path):
             for f in files:
                 if f.endswith(".parquet"):
                     n += pq.read_metadata(os.path.join(root, f)).num_rows
-    else:
-        n = pq.read_metadata(path).num_rows
-    # drop superseded fingerprints for the same table before inserting
-    for k in [k for k in _ROW_COUNT_CACHE if k[:2] == key[:2]]:
-        del _ROW_COUNT_CACHE[k]
-    _ROW_COUNT_CACHE[key] = n
-    return n
+        return n
 
-
-_MINMAX_CACHE: dict = {}
+    return memo(None, ("row_count", os.path.abspath(sf_dir), name), count, [path])
 
 
 def table_column_minmax(sf_dir: str, name: str, column: str):
@@ -210,34 +140,34 @@ def table_column_minmax(sf_dir: str, name: str, column: str):
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (os.path.abspath(sf_dir), name, column, path_fingerprint(path))
-    if key in _MINMAX_CACHE:
-        return _MINMAX_CACHE[key]
-    files = []
-    if os.path.isdir(path):
-        for root, _, fs in os.walk(path):
-            files += [os.path.join(root, f) for f in fs if f.endswith(".parquet")]
-    else:
-        files = [path]
-    mins, maxs = [], []
-    for f in files:
-        md = pq.read_metadata(f)
-        for rg in range(md.num_row_groups):
-            row_group = md.row_group(rg)
-            for ci in range(row_group.num_columns):
-                col = row_group.column(ci)
-                if col.path_in_schema != column:
-                    continue
-                st = col.statistics
-                if st is None or not st.has_min_max:
-                    return None
-                mins.append(st.min)
-                maxs.append(st.max)
-    out = (float(min(mins)), float(max(maxs))) if mins else None
-    for k in [k for k in _MINMAX_CACHE if k[:3] == key[:3]]:
-        del _MINMAX_CACHE[k]
-    _MINMAX_CACHE[key] = out
-    return out
+
+    def minmax():
+        files = []
+        if os.path.isdir(path):
+            for root, _, fs in os.walk(path):
+                files += [
+                    os.path.join(root, f) for f in fs if f.endswith(".parquet")
+                ]
+        else:
+            files = [path]
+        mins, maxs = [], []
+        for f in files:
+            md = pq.read_metadata(f)
+            for rg in range(md.num_row_groups):
+                row_group = md.row_group(rg)
+                for ci in range(row_group.num_columns):
+                    col = row_group.column(ci)
+                    if col.path_in_schema != column:
+                        continue
+                    st = col.statistics
+                    if st is None or not st.has_min_max:
+                        return None
+                    mins.append(st.min)
+                    maxs.append(st.max)
+        return (float(min(mins)), float(max(maxs))) if mins else None
+
+    key = ("minmax", os.path.abspath(sf_dir), name, column)
+    return memo(None, key, minmax, [path])
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -32,7 +32,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 8)
-    runs = int(os.environ.get("TEZ_SPARK_BUILD_RUNS", "2"))
+    # at least one timed build: with 0, best stays None and every query
+    # would land in errors
+    runs = max(1, int(os.environ.get("TEZ_SPARK_BUILD_RUNS", "2")))
     out_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/build_sweep.json"
 
     from tez_spark.plans.registry import all_queries
