@@ -92,6 +92,15 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _default_driver_mem() -> str:
+    """Driver heap when TEZ_SPARK_DRIVER_MEM is unset: a quarter of
+    physical memory, 1-48 GiB. A heap sized past the box never makes
+    Spark evict persisted blocks to disk; the JVM grows until the kernel
+    kills it instead."""
+    total_gb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") / 2**30
+    return f"{max(1, min(48, int(total_gb / 4)))}g"
+
+
 def get_spark(
     app_name: str = "tez_spark",
     cpus: int | None = None,
@@ -123,7 +132,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # local mode: driver heap is the only memory knob; undersizing it
         # turns shuffles/aggs into GC thrash with wild run-to-run variance.
-        .config("spark.driver.memory", os.environ.get("TEZ_SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("TEZ_SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # TezSplitGrouper max 1GB/min 50MB per group -> Spark file packing.
