@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+(default: the sf0.1 fixture) on local[$SPARK_GRAFT_CPUS] and prints two
+JSON lines: a bench_diagnostics line, then the headline
+{"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: sec}, "sf": ...} (see format_headline).
 
 Per BASELINE.md: session startup is excluded (Tez's own paper separates
 cold AM launch from warm-session submission); each query is timed as the
@@ -19,227 +20,44 @@ import sys
 import time
 
 
-def format_headline(line: dict, timings: dict, names, budget: int = 1980) -> str:
-    """Serialize the headline JSON line GUARANTEED to fit the driver's
-    ~2000-char stdout tail — the r5 parsed-null overflow must be
-    unreproducible at ANY registry size and ANY value mix (unit-tested
-    at 125 queries × 3-digit values in tests/test_bench_contract.py).
-
-    Precision ladder, each tier only when the previous overflows (the
-    registry's NAME mass alone is ~1.5KB at 109 queries, so the ladder
-    optimizes value chars — names are the contract and never shrink):
-    1. 2dp timings;
-    2. 1dp, integers for values ≥10, and integral values as bare ints
-       ("1.0" → "1") — the realistic steady state at today's registry
-       size (~1.97KB measured; BENCH_r06 itself shipped at 1dp);
-    3. integers for everything ≥1s, 1dp kept BELOW 1s — sub-second
-       entries are where integer rounding destroys the signal (0.3 → 0),
-       so they hold precision longest;
-    3b. drop steal_pct (OUR host-noise diagnostic — not one of the
-       driver's contract fields, and the full-precision diagnostics
-       line keeps it) before any timing precision is sacrificed: at 117
-       names the tier-3 realistic mix measured 1994 chars, 14 over
-       budget, and steal_pct's ~20 chars are strictly cheaper than
-       integer-rounding every sub-second entry (r10);
-    3c. 1dp kept exactly where the integer would print 0 for a query
-       that really ran (total signal loss), nearest integer everywhere
-       else (error <= ~0.5) — an honest mid-step between full
-       sub-second precision and tier 4's zeros (r10: at 118 names
-       tier 3 no longer fit even with steal_pct shed). Contract bound:
-       a query at or above the 1dp tick (t >= 0.05) never prints 0;
-       genuinely sub-tick queries (t < 0.05) quantize to 0.0 — that is
-       honest rounding, not signal loss, and inflating them to a fake
-       0.1 would overstate a 5ms query 20x;
-    3d. DECISECOND SPLIT (VERDICT r10 item 2: at 118 names the 3c line
-       measured ~2068 chars — 69 of 118 real queries printed 0 in the
-       shipped tier-4 artifact, losing all round-over-round sub-second
-       signal; and the measured registry has ZERO sub-tick queries, so
-       dropping 0.0 entries frees nothing): entries whose integer would
-       print 0 move to a sibling "queries_ds" map holding DECISECONDS
-       as ints (0.3s -> 3, one char instead of three — the same +/-0.05
-       signal as 1dp at a third of the value chars; a ds value of 0 is
-       the honest sub-tick quantization). Integer-second entries stay
-       in "queries". Every query still appears by name exactly once
-       across the two maps — nothing dropped, nothing prints a false 0;
-    3e. PARTIAL decisecond drop (r12: at 121 names the full ds split
-       measures ~25 chars over budget, and the old all-or-nothing
-       fallback threw away ALL 75 sub-second per-query entries to save
-       those 25 chars): shed ds entries SMALLEST-VALUE-FIRST
-       (alphabetical tiebreak — deterministic) into an explicit
-       "queries_sub_sec" count until the line fits. The least
-       informative rows (those closest to the 0.05 s tick, where one
-       ds of quantization is the largest relative error anyway) lose
-       their names first; the expensive sub-second rows keep
-       round-over-round signal;
-    3f. if even an empty ds map overflows, every sub-second entry is in
-       the count (the r11 behavior) — reachable only beyond ~130 names;
-    4. integer seconds for everything and failed queries as -1 — at 109
-       real names a partial emit full of "-1.0" was measured at 2105
-       chars, over the tail, so the r6 tiers alone were not a guarantee;
-    5. drop FAILED (-1) entries from the map, recording the count in
-       "queries_failed" — at 113 names even the all-"-1" tier-4 partial
-       emit crossed the budget, and dropping entries that carry no
-       timing signal is strictly better than dropping successful ones
-       (an all-failed partial now renders a near-empty map + count);
-    6. drop remaining per-query entries from the (name-sorted) tail
-       until the line fits, recording how many in "queries_omitted" —
-       never silent, and the contract fields plus the total always
-       survive. Only reachable in windows no physical run produces
-       (every query 3-digit seconds); full precision for every query
-       always stays in the diagnostics line either way.
-    Mutates line["queries"]."""
-    ordered = sorted(names)
-    steal = line.get("steal_pct")
-
-    def render(tier: float, keep_steal: bool = True) -> str:
-        line.pop("queries_ds", None)
-        line.pop("queries_sub_sec", None)
-        line.pop("queries_ms", None)
-        line.pop("units", None)
-        if steal is not None:
-            if keep_steal:
-                line["steal_pct"] = steal
-            else:
-                line.pop("steal_pct", None)
-        def v(n):
-            t = timings.get(n, -1.0)
-            if tier >= 4:
-                return int(round(t))
-            if tier == 3.5:
-                # keyed on the OUTCOME, not a threshold: keep 1dp
-                # exactly where the integer would print 0 (and the
-                # query really ran) — "never print 0" is the contract
-                i = int(round(t))
-                return round(t, 1) if i == 0 and t > 0 else i
-            if tier == 3:
-                return int(round(t)) if abs(t) >= 0.95 else round(t, 1)
-            if tier == 2:
-                if t >= 9.95:
-                    return int(round(t))
-                r = round(t, 1)
-                return int(r) if r == int(r) else r
-            return round(t, 2)
-
-        if tier in (3.8, 3.85, 3.9):
-            qs: dict = {}
-            ds: dict = {}
-            sub = 0
-            for n in ordered:
-                t = timings.get(n, -1.0)
-                i = int(round(t))
-                if i == 0 and t > 0:
-                    if tier == 3.9:
-                        sub += 1
-                    else:
-                        # HALF-UP, not banker's: a query exactly at the
-                        # 0.05s tick must round to 1 ds, never 0 (the
-                        # contract bound), and round(0.5) == 0 in Python
-                        ds[n] = int(t * 10 + 0.5)
-                else:
-                    qs[n] = i
-
-            def emit_split() -> str:
-                line["queries"] = qs
-                line.pop("queries_ds", None)
-                line.pop("queries_sub_sec", None)
-                line.pop("units", None)
-                if ds:
-                    line["queries_ds"] = ds
-                    # self-documenting units (VERDICT r13 item 8): the
-                    # two maps carry DIFFERENT units and must never be
-                    # summed as one — say so in the line itself
-                    line["units"] = {"queries": "sec", "queries_ds": "decisec"}
-                if sub:
-                    line["queries_sub_sec"] = sub
-                return json.dumps(line, separators=(",", ":"))
-
-            out = emit_split()
-            if tier == 3.85:
-                # shed the least-informative ds entries (smallest value,
-                # alphabetical tiebreak) into the count until it fits
-                shed = sorted(ds.items(), key=lambda kv: (kv[1], kv[0]))
-                while len(out) > budget and shed:
-                    name, _ = shed.pop(0)
-                    del ds[name]
-                    sub += 1
-                    out = emit_split()
-            return out
-        line["queries"] = {n: v(n) for n in ordered}
-        return json.dumps(line, separators=(",", ":"))
-
-    for tier, keep_steal in (
-        (1, True), (2, True), (3, True), (3, False), (3.5, False),
-        (3.8, False), (3.85, False), (3.9, False), (4, False),
-    ):
-        out = render(tier, keep_steal)
-        if len(out) <= budget:
-            return _with_ms(line, timings, ordered, budget, out)
-    # tier 5: failed entries carry no timing signal — drop them (with an
-    # explicit count) before any successful timing is sacrificed
-    kept = [n for n in ordered if timings.get(n, -1.0) >= 0]
-    if len(kept) < len(ordered):
-        line["queries_failed"] = len(ordered) - len(kept)
-    line["queries"] = {n: int(round(timings.get(n, -1.0))) for n in kept}
-    out = json.dumps(line, separators=(",", ":"))
-    if len(out) <= budget:
-        return out
-    # tier 6: tail omission of successful entries, never silent
-    while kept:
-        kept.pop()
-        line["queries"] = {n: int(round(timings.get(n, -1.0))) for n in kept}
-        line["queries_omitted"] = len(ordered) - len(kept) - line.get(
-            "queries_failed", 0
-        )
-        out = json.dumps(line, separators=(",", ":"))
-        if len(out) <= budget:
-            return out
-    return out
+# The capture of this script's stdout keeps its last 2000 chars (the
+# `tail` of every BENCH_r*.json is exactly 2000 long); the headline plus
+# its newline must fit whole, or the capture records parsed:null (r2, r5).
+HEADLINE_BUDGET = 1980
 
 
-def _with_ms(
-    line: dict, timings: dict, names, budget: int, fitted: str
+def format_headline(
+    line: dict, timings: dict, names, budget: int = HEADLINE_BUDGET
 ) -> str:
-    """Float-resolution enrichment (VERDICT r16 item 1, r17): once the
-    precision ladder settles on a fitting rendering, spend any LEFTOVER
-    budget on a "queries_ms" map — integer milliseconds, most expensive
-    query first (cost desc, name asc tiebreak), adding entries only
-    while the whole line still fits. Strictly additions-only: the
-    fitted "queries"/"queries_ds" maps are byte-identical to the
-    ladder's choice, so every existing consumer parses exactly what it
-    parsed before; the ms entries de-quantize the rows that dominate
-    the total (where 1 s buckets hid every win and regression). A
-    subset run (TEZ_SPARK_BENCH_ONLY) or a smaller registry gets the
-    complete map; at today's ~124-name registry the driver's
-    ~2000-char stdout tail cannot hold a second full name mass
-    (the ladder already sheds decisecond entries to fit), so the
-    COMPLETE ms map additionally always travels in the diagnostics
-    line, unconditionally and at full fleet width."""
+    """Serialize the headline JSON line within `budget` chars at any
+    registry size and value mix. One greedy rule: the queries that ran
+    are named in cost order (descending, name ascending on ties), in
+    seconds at ms resolution, and the cheapest ones that do not fit are
+    counted in "queries_omitted". Failed queries carry no timing and are
+    only counted, in "queries_failed". Every query is accounted for
+    exactly once, nothing prints a false 0, and the contract fields
+    already in `line` always survive; the complete per-query ms map
+    travels in the diagnostics line. Mutates `line`."""
     ran = sorted(
         (n for n in names if timings.get(n, -1.0) >= 0),
         key=lambda n: (-timings[n], n),
     )
-    ms: dict[str, int] = {}
-    prev_units = line.get("units")
-    best = fitted
-    for n in ran:
-        ms[n] = int(round(timings[n] * 1000))
-        line["queries_ms"] = ms
-        line["units"] = dict(
-            prev_units or {"queries": "sec"}, queries_ms="ms"
-        )
-        trial = json.dumps(line, separators=(",", ":"))
-        if len(trial) <= budget:
-            best = trial
-        else:
-            del ms[n]
-            break
-    if not ms:
-        line.pop("queries_ms", None)
-        if prev_units is None:
-            line.pop("units", None)
-        else:
-            line["units"] = prev_units
-    return best
+    if len(ran) < len(names):
+        line["queries_failed"] = len(names) - len(ran)
+
+    def render(k: int) -> str:
+        line["queries"] = {n: round(timings[n], 3) for n in ran[:k]}
+        line.pop("queries_omitted", None)
+        if k < len(ran):
+            line["queries_omitted"] = len(ran) - k
+        return json.dumps(line, separators=(",", ":"))
+
+    k = len(ran)
+    out = render(k)
+    while k and len(out) > budget:
+        k -= 1
+        out = render(k)
+    return out
 
 
 def achieved_runs(n_samples: dict, queries, failed: set) -> int:
@@ -445,12 +263,10 @@ def main() -> None:
         # line must fit the tail WHOLE or the driver records parsed:null
         # (r2's giant single line and r5's 99-query+prewarm line both
         # overflowed it). The headline therefore carries only the contract
-        # fields (metric/value/unit/queries/sf) plus steal_pct, with
-        # per-query timings at 2dp (~1.9KB at 99 queries); everything else
-        # (loadavg, runs policy, prewarm latencies/build cost, 3dp
-        # medians, protocol tag) lives in the diagnostics line. A shrink
-        # fallback drops precision if the registry ever outgrows the
-        # budget again.
+        # fields (metric/value/unit/queries/sf) plus steal_pct, runs and
+        # partial, with as many per-query timings as fit (format_headline);
+        # everything else (loadavg, runs policy, prewarm latencies/build
+        # cost, 3dp medians, protocol tag) lives in the diagnostics line.
         aggregate()
         total = round(sum(t for t in timings.values() if t >= 0), 3)
         # full-precision ORACLED subtotal (the paired-window numerator
@@ -474,22 +290,19 @@ def main() -> None:
                 "protocol": "min-of-n-v4-paired-interleaved-prewarmed",
                 "samples": {n: n_samples.get(n, 0) for n in sorted(queries)},
                 "medians": {n: medians[n] for n in sorted(medians)},
-                # full-fleet float resolution (r17): the headline's
-                # integer/decisecond buckets exist only to fit the
-                # driver's ~2000-char stdout tail; the per-query MINS in
-                # milliseconds live here so every captured run (PERF.md
-                # window stamps, the low-core scaling block, A/B sweeps)
-                # has de-quantized per-query data
+                # full-fleet ms resolution (r17): the headline names only
+                # the queries that fit HEADLINE_BUDGET; the per-query
+                # MINS of EVERY query live here so each captured run
+                # (PERF.md window stamps, the low-core scaling block, A/B
+                # sweeps) has complete per-query data
                 "queries_ms": {
                     n: int(round(timings[n] * 1000))
                     for n in sorted(queries)
                     if timings.get(n, -1.0) >= 0
                 },
                 "loadavg": [round(load_start, 2), round(_load1(), 2)],
-                # ALSO here, not just the headline: tier 3b sheds
-                # steal_pct from the headline at >=117 names, and the
-                # host-noise protocol must keep its signal somewhere
-                # (r10 review)
+                # also in the headline; kept here so this line is
+                # self-contained
                 "steal_pct": steal_pct,
                 "total_oracled": total_oracled,
                 "runs_policy": runs,

@@ -1,13 +1,21 @@
 """bench.py stdout contract: the headline JSON line must fit the
 driver's ~2000-char stdout tail at ANY registry size and value mix — the
 r5 parsed-null truncation must be unreproducible (VERDICT r6 task 8).
+One greedy rule fills it: queries that ran are named in cost order at ms
+resolution while the line fits, the cheapest rest are counted in
+queries_omitted, failed ones in queries_failed.
 No Spark session needed; pure formatting."""
 
 from __future__ import annotations
 
+import glob
 import json
+import os
+import random
 
 import bench
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _line(partial: bool = False, runs: int = 1) -> dict:
@@ -31,68 +39,11 @@ def _real_names() -> list[str]:
     return list(all_queries())
 
 
-def test_headline_fits_tail_at_125_queries_3_digit_values():
-    """125 realistically-named queries all burst-inflated to 999.99s —
-    far beyond anything a physical window produces — must still
-    serialize under 2000 chars, parse, and account for every query
-    (entries present + queries_omitted == 125; omission is explicit,
-    never silent)."""
-    names = _real_names()
-    names = names + [f"next_round_q{i:02d}" for i in range(125 - len(names))]
-    assert len(names) == 125
-    timings = {n: 999.99 for n in names}
-    out = bench.format_headline(_line(), timings, names)
-    assert len(out) < 2000, f"headline overflows the driver tail: {len(out)}"
-    parsed = json.loads(out)
-    assert parsed["metric"] == "tez_spark_total_wall_clock"
-    assert parsed["value"] == 123456.789
-    assert len(parsed["queries"]) + parsed.get("queries_omitted", 0) == 125
-    assert all(v == 1000 for v in parsed["queries"].values())
-
-
-def test_headline_partial_all_failed_fits_without_omission():
-    """A driver-timeout partial emit (every query -1.0) at the CURRENT
-    registry must fit with every query ACCOUNTED FOR and no successful
-    timing omitted. Registry growth history: the all-"-1.0" emit was
-    2105 chars at 109 names (r6 added the integral tier), and at 113
-    names even the all-"-1" integer tier crossed 1980 — failed entries
-    now collapse into an explicit "queries_failed" count instead
-    (tier 5), which scales to any registry size because -1 entries
-    carry no timing signal."""
-    names = _real_names()
-    out = bench.format_headline(_line(partial=True), {}, names)
-    assert len(out) < 2000, f"partial emit overflows: {len(out)}"
-    parsed = json.loads(out)
-    assert parsed["partial"] is True
-    assert "queries_omitted" not in parsed
-    n_acct = len(parsed["queries"]) + parsed.get("queries_failed", 0)
-    assert n_acct == len(names)
-    assert all(v == -1 for v in parsed["queries"].values())
-
-
-def _flat(parsed: dict) -> dict:
-    """Per-query seconds across both maps: 'queries' (seconds) plus the
-    tier-3d 'queries_ds' sibling (deciseconds)."""
-    out = dict(parsed["queries"])
-    for n, v in parsed.get("queries_ds", {}).items():
-        assert n not in out  # exactly one map per query
-        out[n] = v / 10.0
-    return out
-
-
-def test_headline_measured_r10_mix_never_prints_zero():
-    """The MIX THAT ACTUALLY SHIPPED broken in BENCH_r10 (VERDICT r10
-    item 2): at the live registry size, ~59% of queries in [0.05, 0.5)s,
-    ~28% in [0.5, 0.95)s, the rest 1-10s (the r11 idle-measured
-    distribution — ZERO sub-tick entries, so the drop-0.0-entries
-    fallback frees nothing). Tier 3d must fire: every query appears by
-    name with NONZERO sub-second signal (deciseconds in queries_ds or
-    integer seconds in queries), within +/-0.05s for sub-second entries,
-    and the line fits the driver tail."""
-    import random
-
-    names = _real_names()
-    rng = random.Random(11)
+def _r10_mix(names, seed: int) -> dict:
+    """The mix that shipped in BENCH_r10 (VERDICT r10 item 2), the r11
+    idle-measured distribution: ~59% of queries in [0.05, 0.5) s, ~28% in
+    [0.5, 0.95) s, the rest 1-10 s."""
+    rng = random.Random(seed)
     timings = {}
     for i, n in enumerate(sorted(names)):
         r = i / len(names)
@@ -102,98 +53,234 @@ def test_headline_measured_r10_mix_never_prints_zero():
             timings[n] = round(rng.uniform(0.5, 0.94), 3)
         else:
             timings[n] = round(rng.uniform(1.0, 10.0), 3)
-    out = bench.format_headline(_line(), timings, names)
-    assert len(out) <= 1980, f"headline overflows the driver tail: {len(out)}"
+    return timings
+
+
+def _headline(timings: dict, names, partial: bool = False, runs: int = 1) -> dict:
+    """Render one headline and assert the whole contract on it: it fits
+    the budget and parses; the contract fields survive unchanged; every
+    query is accounted for exactly once across queries / queries_failed
+    / queries_omitted; failed queries are never named; each named value
+    is within 0.0005 s of its timing (no false 0); and every named query
+    sorts before every omitted one by (cost desc, name asc)."""
+    line = _line(partial, runs)
+    fields = {k: v for k, v in line.items() if k != "queries"}
+    out = bench.format_headline(line, timings, names)
+    assert len(out) <= bench.HEADLINE_BUDGET, len(out)
     parsed = json.loads(out)
-    flat = _flat(parsed)
-    # every query accounted for: by name, or (tier 3e overflow at fat
-    # mixes) inside the explicit sub-second drop count — never silently
-    dropped = parsed.get("queries_sub_sec", 0)
-    assert len(flat) + dropped == len(names)
-    assert set(flat) <= set(names)
-    if dropped:
-        # only sub-second entries may be dropped; integer-second names
-        # always survive
-        assert all(timings[n] >= 0.95 or n in flat or timings[n] < 0.5
-                   for n in names)
-    for n, v in flat.items():
-        assert v != 0, (n, v, timings[n])  # >= tick: never prints 0
-        assert abs(v - timings[n]) <= 0.551, (n, v, timings[n])
-        if timings[n] < 0.45:  # decisecond entries: +/-0.05 signal
-            assert abs(v - timings[n]) <= 0.051, (n, v, timings[n])
+    for k, v in fields.items():
+        assert parsed[k] == v, (k, parsed.get(k), v)
+    qs = parsed["queries"]
+    ran = [n for n in names if timings.get(n, -1.0) >= 0]
+    assert set(qs) <= set(ran)
+    assert parsed.get("queries_failed", 0) == len(names) - len(ran)
+    assert len(qs) + parsed.get("queries_omitted", 0) == len(ran)
+    # the two counts appear only when nonzero
+    assert parsed.get("queries_failed", 1) > 0
+    assert parsed.get("queries_omitted", 1) > 0
+    for n, v in qs.items():
+        assert abs(v - timings[n]) <= 0.0005 + 1e-9, (n, v, timings[n])
+        assert v != 0 or timings[n] < 0.0005, (n, v, timings[n])
+    omitted = set(ran) - set(qs)
+    if qs and omitted:
+        def key(n):
+            return (-timings[n], n)
+
+        assert max(map(key, qs)) < min(map(key, omitted))
+    return parsed
+
+
+def test_headline_budget_fits_shortest_captured_tail():
+    """The budget plus the headline's newline fits the shortest captured
+    stdout tail (every BENCH_r*.json `tail` so far is exactly 2000
+    chars, not the ~2048 once assumed)."""
+    tails = [
+        len(json.load(open(p))["tail"])
+        for p in glob.glob(os.path.join(_REPO, "BENCH_r*.json"))
+    ]
+    assert tails
+    assert bench.HEADLINE_BUDGET + 1 <= min(tails)
+
+
+def test_headline_fits_tail_at_125_queries_3_digit_values():
+    """125 realistically-named queries all burst-inflated to 999.99s —
+    far beyond anything a physical window produces — must still
+    serialize under the budget, parse, and account for every query
+    (omission is explicit, never silent)."""
+    names = _real_names()
+    names = names + [f"next_round_q{i:02d}" for i in range(125 - len(names))]
+    assert len(names) == 125
+    parsed = _headline({n: 999.99 for n in names}, names)
+    assert parsed["queries_omitted"] > 0
+    assert all(v == 999.99 for v in parsed["queries"].values())
+
+
+def test_headline_partial_all_failed_fits_without_omission():
+    """A SIGTERM-timeout partial emit (every query failed or never
+    attempted) at the live registry names nothing and counts every
+    query in queries_failed — no -1 entries, no omission."""
+    names = _real_names()
+    parsed = _headline({}, names, partial=True)
+    assert parsed["queries"] == {}
+    assert parsed["queries_failed"] == len(names)
+    assert "queries_omitted" not in parsed
+
+
+def test_headline_measured_r10_mix_never_prints_zero():
+    """The mix that shipped broken in BENCH_r10 (69 of 118 real queries
+    printed 0): at the live registry every named query carries its
+    nonzero ms timing."""
+    names = _real_names()
+    timings = _r10_mix(names, seed=11)
+    parsed = _headline(timings, names)
+    assert all(v > 0 for v in parsed["queries"].values())
+
+
+def test_headline_names_every_query_over_half_a_second():
+    """At the live registry and the r10 mix, every query costing at
+    least 0.5 s — the rows that carry the total — is named."""
+    names = _real_names()
+    for seed in range(20):
+        timings = _r10_mix(names, seed)
+        parsed = _headline(timings, names)
+        heavy = {n for n, t in timings.items() if t >= 0.5}
+        assert heavy <= set(parsed["queries"]), (seed, heavy - set(parsed["queries"]))
 
 
 def test_headline_realistic_mix_keeps_subsecond_precision():
-    """Today's realistic shape (0.2–3s values at the full registry) must
-    NEVER print 0 for a query at or above the 1dp tick (t >= 0.05s) —
-    integer rounding a 0.3s query to 0 would destroy the per-query
-    BENCH record the judge compares across rounds. Precision degrades
-    honestly with registry size (tier 3c keeps 1dp exactly where the
-    integer would be 0); genuinely sub-tick queries may quantize to
-    0.0 — honest rounding, not signal loss."""
-    import random
-
+    """A 0.2–3 s mix at the live registry plus one planted sub-tick
+    (31 ms) query: every named value is exact to the millisecond."""
     names = _real_names()
     rng = random.Random(3)
     timings = {n: round(rng.uniform(0.2, 3.0), 3) for n in names}
-    # plant one sub-tick entry: it MAY print 0.0 (honest quantization)
-    subtick = sorted(names)[0]
-    timings[subtick] = 0.031
-    out = bench.format_headline(_line(), timings, names)
-    assert len(out) < 2000
-    parsed = json.loads(out)
-    assert "queries_omitted" not in parsed
-    flat = _flat(parsed)
-    assert len(flat) + parsed.get("queries_sub_sec", 0) == len(names)
-    for n, v in flat.items():
-        if n == subtick:
-            assert abs(v - timings[n]) <= 0.051, (n, v, timings[n])
-            continue
-        assert v != 0, (n, v, timings[n])  # >= tick: never prints 0
-        assert abs(v - timings[n]) <= 0.551, (n, v, timings[n])
+    timings[sorted(names)[0]] = 0.031
+    parsed = _headline(timings, names)
+    assert len(parsed["queries"]) >= len(names) // 2
+
+
+def test_headline_ms_enrichment_is_complete_on_small_registries():
+    """When the registry is small enough, the headline names EVERY query
+    at ms resolution and omits nothing."""
+    for size in (12, 60):
+        names = _real_names()[:size]
+        timings = {n: 0.123 + i for i, n in enumerate(names)}
+        parsed = _headline(timings, names)
+        assert "queries_omitted" not in parsed
+        assert parsed["queries"] == {n: round(t, 3) for n, t in timings.items()}
+
+
+def test_headline_ms_enrichment_skips_failed_queries():
+    """Failed (-1) queries carry no timing signal: they are only
+    counted in queries_failed, never named."""
+    names = _real_names()[:20]
+    timings = {n: -1.0 for n in names}
+    timings[names[0]] = 2.5
+    parsed = _headline(timings, names)
+    assert parsed["queries"] == {names[0]: 2.5}
+    assert parsed["queries_failed"] == 19
 
 
 def test_headline_keeps_2dp_precision_when_it_fits():
-    """A smaller registry (or one with short names) keeps the 2dp tier
-    untouched — the shrink tiers only fire on overflow."""
+    """A smaller registry (or one with short names) keeps every value
+    exact — shedding only fires on overflow."""
     names = _real_names()[:80]
-    timings = {n: 1.23 for n in names}
-    out = bench.format_headline(_line(), timings, names)
-    assert len(out) < 2000
-    parsed = json.loads(out)
+    parsed = _headline({n: 1.23 for n in names}, names)
     assert "queries_omitted" not in parsed
-    assert all(v == 1.23 for v in parsed["queries"].values())
+    assert parsed["queries"] == {n: 1.23 for n in names}
+
+
+def test_headline_ms_enrichment_is_additions_only():
+    """Naming queries only ever adds to the contract line: every field
+    the caller put in the line survives byte-identical, and the only
+    keys the headline adds are the queries map and its two counts."""
+    names = _real_names()
+    rng = random.Random(17)
+    timings = {n: round(rng.uniform(0.05, 4.0), 3) for n in names}
+    line = _line()
+    base = json.dumps({k: v for k, v in line.items() if k != "queries"},
+                      separators=(",", ":"))
+    parsed = _headline(timings, names)
+    added = set(parsed) - set(json.loads(base))
+    assert added <= {"queries", "queries_omitted", "queries_failed"}
+    kept = {k: v for k, v in parsed.items() if k not in added}
+    assert json.dumps(kept, separators=(",", ":")) == base
+    for n, v in parsed["queries"].items():
+        assert v == round(timings[n], 3)
+
+
+def test_headline_partial_ds_drop_keeps_largest_subsecond_entries():
+    """At the live registry a mostly sub-second mix (the r12 shape) does
+    not fit whole: the line sheds the SMALLEST entries (name-asc
+    tiebreak) into queries_omitted — not all sub-second ones — so the
+    expensive sub-second rows keep their per-query signal, and every
+    query of a second or more stays named."""
+    names = _real_names()
+    rng = random.Random(7)
+    timings = {}
+    for i, n in enumerate(sorted(names)):
+        r = i / len(names)
+        if r < 0.62:
+            timings[n] = round(rng.uniform(0.05, 0.49), 3)
+        elif r < 0.88:
+            timings[n] = round(rng.uniform(0.5, 0.94), 3)
+        else:
+            timings[n] = round(rng.uniform(1.0, 10.0), 3)
+    parsed = _headline(timings, names, runs=3)
+    qs = parsed["queries"]
+    sub = {n for n in names if timings[n] < 1.0}
+    assert sub & set(qs), "all-or-nothing drop regressed: no sub-second row named"
+    dropped = set(names) - set(qs)
+    if dropped:
+        kept_min = min(timings[n] for n in sub & set(qs))
+        dropped_max = max(timings[n] for n in dropped)
+        assert dropped_max <= kept_min, (dropped_max, kept_min)
+        assert dropped <= sub
+    assert {n for n in names if timings[n] >= 1.0} <= set(qs)
+
+
+def test_headline_names_costliest_queries_first():
+    """At the live registry the line cannot name every query: the ones
+    it sheds are the cheapest (cost desc, name asc tiebreak — asserted
+    by _headline), including on ties."""
+    names = _real_names()
+    for seed in (7, 17):
+        rng = random.Random(seed)
+        timings = {n: round(rng.uniform(0.05, 4.0), 3) for n in names}
+        assert _headline(timings, names).get("queries_omitted", 0) > 0
+    tied = {n: 0.5 for n in names}
+    parsed = _headline(tied, names)
+    assert list(parsed["queries"]) == sorted(names)[: len(parsed["queries"])]
 
 
 def test_headline_never_overflows_even_at_absurd_scale():
-    """Property sweep: 200 long-named queries, mixed failed/3-digit
-    values — the ladder must ALWAYS return a parseable line under
-    budget with the contract fields intact."""
+    """200 long-named queries, half failed and half at 3-digit values:
+    the line still fits, parses, keeps its contract fields and names no
+    failed query."""
     names = [f"extremely_long_query_name_for_growth_{i:03d}" for i in range(200)]
     timings = {n: (999.99 if i % 2 else -1.0) for i, n in enumerate(names)}
-    out = bench.format_headline(_line(partial=True), timings, names)
-    assert len(out) <= 1980
-    parsed = json.loads(out)
-    assert parsed["metric"] == "tez_spark_total_wall_clock"
-    assert parsed["unit"] == "sec"
-    accounted = (
-        len(parsed["queries"])
-        + parsed.get("queries_omitted", 0)
-        + parsed.get("queries_failed", 0)
-    )
-    assert accounted == 200
-    # failed entries are dropped BEFORE any successful timing
+    parsed = _headline(timings, names, partial=True)
+    assert parsed["queries_failed"] == 100
     assert all(v >= 0 for v in parsed["queries"].values())
+
+
+def test_headline_carries_sample_count_through_every_tier():
+    """VERDICT r11 item 4: the diagnostics line that records runs_policy
+    is what the 2000-char stdout tail truncates first, so `runs` — and with it
+    steal_pct and the partial flag — must survive in the HEADLINE at
+    every budget pressure: the live registry, 125 names and 200 names
+    (_headline asserts every contract field)."""
+    names = _real_names()
+    for n_names in (len(names), 125, 200):
+        big = names + [f"extra_q{i:03d}" for i in range(n_names - len(names))]
+        timings = {n: (0.4 if i % 2 else 999.99) for i, n in enumerate(big)}
+        for partial in (False, True):
+            parsed = _headline(timings, big, partial=partial, runs=2)
+            assert parsed["runs"] == 2
 
 
 def test_headline_accounting_property():
     """Property sweep over random registry sizes and value mixes: every
-    query is accounted for exactly once across queries / queries_ds /
-    queries_failed / queries_omitted, the line always fits and parses,
-    and whenever the ladder settled at tier 3d or better (no omission,
-    no failure-collapse), a >= 0.05s query never reads as 0 anywhere."""
-    import random
-
+    rendering satisfies the whole contract asserted by _headline."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -207,9 +294,8 @@ def test_headline_accounting_property():
     )
     def check(n, seed, fail_rate):
         rng = random.Random(seed)
-        names = (real * 3)[:n] if n <= len(real) * 3 else real
-        names = [f"{nm}_{i}" if i >= len(real) else nm
-                 for i, nm in enumerate(names)]
+        names = [real[i % len(real)] + (f"_{i}" if i >= len(real) else "")
+                 for i in range(n)]
         timings = {}
         for nm in names:
             if rng.random() < fail_rate:
@@ -221,155 +307,9 @@ def test_headline_accounting_property():
                     rng.uniform(0.5, 9.99),    # small seconds
                     rng.uniform(10, 999),      # heavy
                 ]), 3)
-        out = bench.format_headline(_line(), timings, names)
-        assert len(out) <= 1980
-        parsed = json.loads(out)
-        qs = parsed["queries"]
-        ds = parsed.get("queries_ds", {})
-        assert not (set(qs) & set(ds))
-        accounted = (len(qs) + len(ds)
-                     + parsed.get("queries_sub_sec", 0)
-                     + parsed.get("queries_failed", 0)
-                     + parsed.get("queries_omitted", 0))
-        assert accounted == len(names), (accounted, len(names))
-        if "queries_omitted" not in parsed and "queries_failed" not in parsed:
-            full_tier = len(qs) + len(ds) == len(names)
-            for nm, t in timings.items():
-                if t >= 0.05 and full_tier and (ds or nm in ds):
-                    # tier 3d fired: sub-second signal must survive
-                    v = ds.get(nm, qs.get(nm))
-                    assert v != 0, (nm, t, v)
+        _headline(timings, names)
 
     check()
-
-
-def test_headline_ms_enrichment_is_complete_on_small_registries():
-    """r17 (VERDICT r16 item 1): when the registry is small enough that
-    the line has slack, queries_ms carries EVERY ran query at integer
-    milliseconds, self-documented in units, and the line still fits."""
-    names = _real_names()[:12]
-    timings = {n: 0.123 + i for i, n in enumerate(names)}
-    out = bench.format_headline(_line(), timings, names)
-    assert len(out) <= 1980
-    parsed = json.loads(out)
-    assert parsed["units"]["queries_ms"] == "ms"
-    assert set(parsed["queries_ms"]) == set(names)
-    for n in names:
-        assert parsed["queries_ms"][n] == int(round(timings[n] * 1000))
-
-
-def test_headline_ms_enrichment_is_additions_only():
-    """The ms map may only ever be APPENDED into leftover budget: the
-    ladder-fitted queries / queries_ds / queries_sub_sec maps must be
-    byte-identical with and without the enrichment step (the driver's
-    parser and the round-over-round comparison see the same shapes),
-    and ms entries must prioritize the most expensive queries."""
-    import random
-
-    names = _real_names()
-    rng = random.Random(17)
-    timings = {n: round(rng.uniform(0.05, 4.0), 3) for n in names}
-    out = bench.format_headline(_line(), dict(timings), names)
-    parsed = json.loads(out)
-    unenriched = bench._with_ms
-    try:
-        bench._with_ms = lambda line, t, nm, b, fitted: fitted
-        base = json.loads(bench.format_headline(_line(), dict(timings), names))
-    finally:
-        bench._with_ms = unenriched
-    assert parsed["queries"] == base["queries"]
-    assert parsed.get("queries_ds", {}) == base.get("queries_ds", {})
-    assert parsed.get("queries_sub_sec", 0) == base.get("queries_sub_sec", 0)
-    assert len(out) <= 1980
-    ms = parsed.get("queries_ms", {})
-    if ms:
-        # cost-descending greedy: every included entry is at least as
-        # expensive as every excluded one (name-asc tiebreak aside)
-        floor = min(timings[n] for n in ms)
-        ceil_excluded = max(
-            (timings[n] for n in names if n not in ms), default=-1.0
-        )
-        assert floor >= ceil_excluded - 1e-9
-        for n, v in ms.items():
-            assert v == int(round(timings[n] * 1000))
-
-
-def test_headline_ms_enrichment_skips_failed_queries():
-    """Failed (-1) queries carry no timing signal and must never appear
-    in queries_ms; an all-failed emit carries no ms map at all."""
-    names = _real_names()[:20]
-    timings = {n: -1.0 for n in names}
-    timings[names[0]] = 2.5
-    out = bench.format_headline(_line(), timings, names)
-    parsed = json.loads(out)
-    assert set(parsed.get("queries_ms", {})) == {names[0]}
-    out_all_failed = bench.format_headline(_line(partial=True), {}, names)
-    assert "queries_ms" not in json.loads(out_all_failed)
-
-
-def test_headline_carries_sample_count_through_every_tier():
-    """VERDICT r11 item 4: a load-degraded driver window defaults to
-    min-of-1 sampling — systematically inflated on this host — and the
-    diagnostics line that records runs_policy is what the driver tail
-    truncates first. The "runs" field must therefore survive in the
-    HEADLINE at every precision tier, including the overflow ladder's
-    deepest steps, so a one-sample artifact is classifiable alone."""
-    names = _real_names()
-    # realistic mix (forces the decisecond tiers at today's size)
-    timings = {n: (0.4 if i % 2 else 3.0) for i, n in enumerate(names)}
-    out = bench.format_headline(_line(runs=1), timings, names)
-    assert json.loads(out)["runs"] == 1
-
-    # absurd overflow mix (drives tier 5/6 omission) still keeps it
-    big = names + [f"extra_q{i:03d}" for i in range(150)]
-    timings = {n: 999.99 for n in big}
-    out = bench.format_headline(_line(runs=2), timings, big)
-    parsed = json.loads(out)
-    assert len(out) < 2000
-    assert parsed["runs"] == 2
-
-
-def test_headline_partial_ds_drop_keeps_largest_subsecond_entries():
-    """Tier 3e (r12): at the current 121-name registry the full
-    decisecond split is ~25 chars over budget; the ladder must shed the
-    SMALLEST-value ds entries (alphabetical tiebreak) into
-    queries_sub_sec — not all of them — so expensive sub-second rows
-    keep their round-over-round per-query signal."""
-    import random
-
-    names = _real_names()
-    rng = random.Random(7)
-    timings = {}
-    for i, n in enumerate(sorted(names)):
-        r = i / len(names)
-        if r < 0.62:
-            timings[n] = round(rng.uniform(0.05, 0.49), 3)
-        elif r < 0.88:
-            timings[n] = round(rng.uniform(0.5, 0.94), 3)
-        else:
-            timings[n] = round(rng.uniform(1.0, 10.0), 3)
-    out = bench.format_headline(_line(runs=3), timings, names)
-    assert len(out) <= 1980
-    parsed = json.loads(out)
-    qs, ds = parsed["queries"], parsed.get("queries_ds", {})
-    dropped = parsed.get("queries_sub_sec", 0)
-    assert len(qs) + len(ds) + dropped == len(names)
-    if dropped:
-        # the partial tier fired: names survive, and the shed policy is
-        # smallest-(value, name)-first — every kept entry sorts at or
-        # above every dropped one
-        assert ds, "all-or-nothing drop regressed: ds emptied"
-        sub = {n: int(timings[n] * 10 + 0.5) for n in names
-               if int(round(timings[n])) == 0 and timings[n] > 0}
-        dropped_names = set(sub) - set(ds)
-        assert len(dropped_names) == dropped
-        kept_min = min((v, n) for n, v in ds.items())
-        dropped_max = max((sub[n], n) for n in dropped_names)
-        assert dropped_max <= kept_min, (dropped_max, kept_min)
-    # dropped entries are only ever sub-second; integer rows keep names
-    for n in names:
-        if int(round(timings[n])) != 0:
-            assert n in qs
 
 
 def test_achieved_runs_ignores_never_attempted_queries():

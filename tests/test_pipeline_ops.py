@@ -423,8 +423,7 @@ def test_exactsubstr_spans_default_plan_is_skew_safe(spark):
     partition holds every instance of a gram with no map-side combine
     and cannot be AQE-skew-split, a straggler on Zipfian text at
     100TB. The per-doc interval-union windows (partitionBy doc_id) are
-    bounded and allowed. The window form stays value-equal behind
-    variant="window"."""
+    bounded and allowed. The DuckDB oracle pins its values."""
     from tez_spark.functions.text_queries import q_exactsubstr_spans
 
     sf = os.environ.get("TEZ_SPARK_TEST_SF", "/root/testdata/sf0.001")
@@ -435,12 +434,6 @@ def test_exactsubstr_spans_default_plan_is_skew_safe(spark):
         if "windowspecdefinition" in line:
             assert "doc_id" in line.split("windowspecdefinition", 1)[1][:40], line
     assert "LeftSemi" in plan, "duplication test lost its semi-join shape"
-    got = sorted(tuple(r) for r in default.collect())
-    win = sorted(
-        tuple(r)
-        for r in q_exactsubstr_spans(spark, sf, variant="window").collect()
-    )
-    assert got == win, "variants diverged"
 
 
 def test_exactsubstr_oracle_window_algebra_property():

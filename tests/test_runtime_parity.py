@@ -346,8 +346,7 @@ def test_tpch15_default_plan_has_no_global_window(spark):
     SF100k). The persist also pins determinism: max and probe read the
     same materialized doubles, so the float-equality join cannot be
     broken by summation-order ulp drift between separately executed
-    reduce stages. The window form stays value-equal behind
-    variant="window"."""
+    reduce stages. The DuckDB oracle pins its values."""
     from tests.conftest import SF_DIR
     from tez_spark.operators.core import release_caches
     from tez_spark.plans.tpch import q_tpch15
@@ -356,13 +355,9 @@ def test_tpch15_default_plan_has_no_global_window(spark):
     plan = default._jdf.queryExecution().executedPlan().toString()
     assert "windowspecdefinition" not in plan, "global max fell back to a window"
     assert "BroadcastExchange" in plan, "scalar max lost its broadcast join-back"
-    got = sorted(tuple(r) for r in default.collect())
-    win = sorted(
-        tuple(r)
-        for r in q_tpch15(spark, SF_DIR, variant="window").collect()
-    )
+    got = default.collect()
     release_caches()
-    assert got == win and len(got) >= 1, "variants diverged"
+    assert len(got) >= 1, "no top supplier"
 
 
 def test_aqe_splits_skewed_join_partition(spark):

@@ -1512,30 +1512,6 @@ def test_long_ingest_auto_compaction_bounds_store(spark, tmp_path):
     assert replay == {}
 
 
-def test_legacy_ann_append_layout_migrates(tmp_path):
-    """ADVICE r15: a maintain_ann store written by the pre-r15 layout
-    (store_dir/append_N) is MIGRATED into store_dir/appends/batch_N on
-    startup instead of silently dropping every previously appended
-    vector; a same-batch-id collision across layouts raises."""
-    from tez_spark.streaming.ingest import _migrate_legacy_ann_appends
-
-    store = tmp_path / "store"
-    for b in (0, 2):
-        os.makedirs(store / f"append_{b}")
-        (store / f"append_{b}" / "part-0.parquet").write_text(f"p{b}")
-    os.makedirs(store / "append_x")  # non-numeric: not a legacy batch
-    assert _migrate_legacy_ann_appends(str(store)) == 2
-    assert sorted(os.listdir(store / "appends")) == ["batch_0", "batch_2"]
-    assert (store / "appends" / "batch_0" / "part-0.parquet").read_text() == "p0"
-    assert not (store / "append_0").exists()
-    assert (store / "append_x").exists()
-    assert _migrate_legacy_ann_appends(str(store)) == 0  # idempotent
-
-    os.makedirs(store / "append_2")
-    with pytest.raises(ValueError, match="BOTH layouts"):
-        _migrate_legacy_ann_appends(str(store))
-
-
 def test_guard_refuses_lone_batch0_after_observed_commit(tmp_path):
     """ADVICE r15: the lone-batch_0 ambiguity. Without local metadata a
     store holding only batch_0 and no checkpoint commits could be a

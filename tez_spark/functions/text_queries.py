@@ -784,9 +784,7 @@ ORACLE["text_dup_spans"] = f"""
 """
 
 
-def q_exactsubstr_spans(
-    spark: SparkSession, sf_dir: str, variant: str = "agg_semi"
-) -> DataFrame:
+def q_exactsubstr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr span EXTRACTION (r12) — the operational step after
     q_text_dup_spans' profile: per document, the MERGED maximal token
     spans covered by duplicated length-L windows, i.e. exactly the
@@ -806,12 +804,11 @@ def q_exactsubstr_spans(
     at runtime, and AQE broadcast-converts the (usually small)
     duplicated-gram set at fixture scales. The A/B'd one-exchange
     alternative — COUNT(*) OVER (PARTITION BY g), 1.13 s vs this
-    form's ~2.2 s at sf0.1 — is retained behind variant="window" for
-    small-scale use: it saves one job, but the per-g window partition
-    holds EVERY instance of a gram with no map-side combine and cannot
-    be AQE-skew-split, so real Zipfian web text makes it a straggler at
-    100TB; the saving is a per-plan floor that vanishes at scale
-    (value-equality A/B-established, both variants oracle-green).
+    form's ~2.2 s at sf0.1 — was rejected: it saves one job, but the
+    per-g window partition holds EVERY instance of a gram with no
+    map-side combine and cannot be AQE-skew-split, so real Zipfian web
+    text makes it a straggler at 100TB; the saving is a per-plan floor
+    that vanishes at scale (PERF.md r12/r13).
     Duplicated positions then merge into maximal intervals with two
     per-doc window functions — running max of span ends marks interval
     starts (classic interval union, no self-join, no driver work), a
@@ -820,24 +817,14 @@ def q_exactsubstr_spans(
     they share no token; the DuckDB oracle mirrors the interval algebra
     verbatim (its own count is a gram-keyed agg+join, an independent
     formulation of the same truth)."""
-    from pyspark.sql import Window
-
-    L = DUP_SPAN_L
     grams = token_gram_plan(spark, sf_dir)
-    if variant == "window":
-        dup = grams.withColumn(
-            "_c", F.count(F.lit(1)).over(Window.partitionBy("g"))
-        ).filter(F.col("_c") >= 2).select(
-            "doc_id", F.col("pos").cast("long").alias("pos")
-        )
-    else:
-        # r14 "dupset" posture: the memoized dup-gram set replaces the
-        # in-query frequency agg (built once at artifact build — see
-        # token_gram_plan / PERF.md r14)
-        dup = grams.join(
-            dup_token_gram_set(spark, sf_dir), "g", "left_semi"
-        ).select("doc_id", F.col("pos").cast("long").alias("pos"))
-    return _merge_dup_spans(dup, L)
+    # r14 "dupset" posture: the memoized dup-gram set replaces the
+    # in-query frequency agg (built once at artifact build — see
+    # token_gram_plan / PERF.md r14)
+    dup = grams.join(
+        dup_token_gram_set(spark, sf_dir), "g", "left_semi"
+    ).select("doc_id", F.col("pos").cast("long").alias("pos"))
+    return _merge_dup_spans(dup, DUP_SPAN_L)
 
 
 def _merge_dup_spans(dup: DataFrame, L: int) -> DataFrame:

@@ -574,7 +574,7 @@ def q_tpch14(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_tpch15(spark: SparkSession, sf_dir: str, variant: str = "persist") -> DataFrame:
+def q_tpch15(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top supplier by quarterly revenue (the view + scalar-max form,
     output rounded to 4dp — each engine's max-selection is
     self-consistent, and rounding removes summation-order ulp noise).
@@ -601,8 +601,7 @@ def q_tpch15(spark: SparkSession, sf_dir: str, variant: str = "persist") -> Data
     r13). The join key is therefore round(·,4) on BOTH sides — the
     output's own 4dp contract, and round is monotone so
     round(max(x),4) == max(round(x,4)): ulp drift (~1e-9 relative) can
-    never cross a 1e-4 rounding boundary it didn't already sit on. The
-    window form stays behind variant="window"."""
+    never cross a 1e-4 rounding boundary it didn't already sit on."""
     from tez_spark.operators.core import tracked_persist
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -619,16 +618,11 @@ def q_tpch15(spark: SparkSession, sf_dir: str, variant: str = "persist") -> Data
             )
         )
     )
-    if variant == "window":
-        matched = revenue.withColumn(
-            "mx", F.max("total_revenue").over(Window.partitionBy())
-        ).filter(F.col("total_revenue") == F.col("mx"))
-    else:
-        revenue = tracked_persist(revenue)
-        mx = revenue.agg(F.round(F.max("total_revenue"), 4).alias("mx"))
-        matched = revenue.join(
-            F.broadcast(mx), F.round(F.col("total_revenue"), 4) == F.col("mx")
-        )
+    revenue = tracked_persist(revenue)
+    mx = revenue.agg(F.round(F.max("total_revenue"), 4).alias("mx"))
+    matched = revenue.join(
+        F.broadcast(mx), F.round(F.col("total_revenue"), 4) == F.col("mx")
+    )
     out = (
         matched.join(supp, F.col("supplier_no") == supp.s_suppkey)
         .select(

@@ -226,7 +226,6 @@ def maintain_ann(
     # instead of probing a vectors-less or partial index.
     idx = os.path.join(store_dir, "index")
     appends = os.path.join(store_dir, "appends")
-    _migrate_legacy_ann_appends(store_dir)
     _recover_swap(appends)
     _guard_store_checkpoint(store_dir, appends)
     _note_checkpoint_commits(store_dir)
@@ -971,7 +970,7 @@ def _recover_swap(freq_store: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Store housekeeping: stream lock, commit high-water mark, fsync, migration
+# Store housekeeping: stream lock, commit high-water mark, fsync
 # ---------------------------------------------------------------------------
 
 def _max_numeric_entry(dirpath: str) -> int:
@@ -1111,41 +1110,6 @@ def _refuse_if_stream_active(store_dir: str) -> None:
             "(or a crash landed mid-batch; resume the stream once to "
             "commit it, then compact)."
         )
-
-
-def _migrate_legacy_ann_appends(store_dir: str) -> int:
-    """Migrate maintain_ann stores from the pre-r15 flat layout
-    (store_dir/append_N) into the current one (store_dir/appends/
-    batch_N) instead of silently ignoring them (ADVICE r15: a carried-
-    over store resumed under the new layout would drop every previously
-    appended vector from probes and compaction). Pure renames — the
-    per-batch parquet contents are identical across layouts. Returns
-    the number of batch dirs migrated; raises on a name collision
-    (both layouts holding the same batch id needs an operator's eyes)."""
-    if not os.path.isdir(store_dir):
-        return 0
-    appends = os.path.join(store_dir, "appends")
-    legacy = sorted(
-        d
-        for d in os.listdir(store_dir)
-        if d.startswith("append_")
-        and d.split("_", 1)[1].isdigit()
-        and os.path.isdir(os.path.join(store_dir, d))
-    )
-    for d in legacy:
-        dst = os.path.join(appends, "batch_" + d.split("_", 1)[1])
-        if os.path.exists(dst):
-            raise ValueError(
-                f"legacy append dir {os.path.join(store_dir, d)} collides "
-                f"with existing {dst} — the store holds BOTH layouts for "
-                "the same batch id; resolve manually."
-            )
-        os.makedirs(appends, exist_ok=True)
-        os.rename(os.path.join(store_dir, d), dst)
-    if legacy:
-        _fsync_dir(appends)
-        _fsync_dir(store_dir)
-    return len(legacy)
 
 
 def _fsync_dir(path: str) -> None:

@@ -4,8 +4,12 @@ Run from the repo root: python tools/gen_plans.py
 Walks every registry query's executedPlan at sf0.01 and tabulates the
 exchange/broadcast/join/scan structure - the artifact the scale audit
 reads (PLANS.md). No query is executed; only plans are built.
+
+python tools/gen_plans.py --dump <query> [<query> ...] instead prints each
+named query's explain("formatted") at $SPARK_GRAFT_SF_DIR (default: SF
+below) to stdout and writes nothing.
 """
-import re, sys
+import os, re, sys
 sys.path.insert(0, ".")
 from tez_spark.session import get_spark
 from tez_spark.plans.registry import all_queries, all_oracles
@@ -13,6 +17,15 @@ from tez_spark.plans.registry import all_queries, all_oracles
 SF = "/root/testdata/sf0.01"
 spark = get_spark(cpus=8, shuffle_partitions=8)
 qs, os_ = all_queries(), all_oracles()
+
+if sys.argv[1:2] == ["--dump"]:
+    for name in sys.argv[2:]:
+        df = qs[name](spark, os.environ.get("SPARK_GRAFT_SF_DIR", SF))
+        print(f"== {name} ==")
+        print(df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"))
+    spark.stop()
+    sys.exit(0)
 
 rows = []
 for name, fn in qs.items():
