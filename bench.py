@@ -9,21 +9,33 @@ cold AM launch from warm-session submission); each query is timed as the
 full plan execution via a count-style action that cannot be
 optimized away (df.write to a no-op is overkill locally; we collect a
 digest).
+
+`python bench.py --jobs OUT.json` runs the same protocol with every
+sample under observability.capture and, instead of the headline, writes
+the per-query job histogram to OUT.json (see write_jobs).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import signal
 import sys
 import time
 
+from perfbench.host import cpu_jiffies
+
 
 # The capture of this script's stdout keeps its last 2000 chars (the
 # `tail` of every BENCH_r*.json is exactly 2000 long); the headline plus
 # its newline must fit whole, or the capture records parsed:null (r2, r5).
 HEADLINE_BUDGET = 1980
+
+WARM_BUDGET_S = 150.0  # warm-up starts no query past this (see warm)
+SETTLE_S = 45.0  # longest wait for an idle host (see sample_runs)
+SLOW_CUTOFF_S = 5.0  # slower executions are not paired (see run_passes)
+BUDGET_S = 360.0  # no pass starts past this (see run_passes)
 
 
 def format_headline(
@@ -60,7 +72,7 @@ def format_headline(
     return out
 
 
-def achieved_runs(n_samples: dict, queries, failed: set) -> int:
+def achieved_runs(n_samples: dict, queries, failed) -> int:
     """ACHIEVED sample floor for the headline "runs" stamp: the minimum
     sample count over queries that actually RAN. Never-attempted queries
     on a SIGTERM-mid-sweep partial have 0 samples and must not drag the
@@ -83,316 +95,405 @@ def _digest_action(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def main() -> None:
+def session_from_env(app_name: str = "tez_spark_bench"):
+    """(spark, sf_dir, cpus): local[$SPARK_GRAFT_CPUS] (default: every
+    core) with one shuffle partition per core, timing $SPARK_GRAFT_SF_DIR."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 8)
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from tez_spark.memo import stats as memo_stats
     from tez_spark.session import get_spark
 
-    spark = get_spark(app_name="tez_spark_bench", cpus=cpus,
-                      shuffle_partitions=cpus)
+    spark = get_spark(app_name=app_name, cpus=cpus, shuffle_partitions=cpus)
+    return spark, sf_dir, cpus
 
+
+def select_queries() -> dict:
+    """The query registry. Debug aid: TEZ_SPARK_BENCH_ONLY=q08,
+    dedup_minhash_lsh restricts the run (the emitted JSON then covers
+    only those queries — never ship it as the round number)."""
     from tez_spark.plans.registry import all_queries
 
     queries = all_queries()
-    # debug aid: TEZ_SPARK_BENCH_ONLY=q08,dedup_minhash_lsh restricts the
-    # run (the emitted JSON then covers only those queries — never ship it
-    # as the round number).
     only = os.environ.get("TEZ_SPARK_BENCH_ONLY")
     if only:
         keep = {k.strip() for k in only.split(",")}
         queries = {k: v for k, v in queries.items() if k in keep}
+    return queries
 
-    # Session-prewarm measurement (the Tez paper's headline mechanism:
-    # prewarmed AM/containers cut DAG-submission latency — TezConfiguration
-    # prewarm; BASELINE.md cites the paper's cold/warm split). cold =
-    # first-ever plan build + execution on the just-started JVM (pays
-    # analysis, codegen compile, Python-worker fleet start); warm = the
-    # identical call after the warm-up loop below. Both run the flagship
-    # entry query at sf0.001, so the delta is pure session state, not data.
-    cold_submit = warm_submit = None
+
+def warm(builds: dict) -> None:
+    """Execute every plan once, in the SAME sorted order the timing loop
+    uses (registry order previously decided who got warmed, so a registry
+    rotation silently changed which queries' first timed sample paid
+    codegen — r5 saw dedup_clusters 3.5s -> 16.5s from exactly that).
+    Stops after WARM_BUDGET_S: the expensive compiles (iterative CC,
+    128-agg minhash, 32-term simhash) sit mid-alphabet. Errors are the
+    sampler's to record."""
+    warm_t0 = time.monotonic()
+    for name in sorted(builds):
+        if time.monotonic() - warm_t0 > WARM_BUDGET_S:
+            break
+        try:
+            _digest_action(builds[name]())
+        except Exception:
+            pass
+
+
+def warm_up(spark, queries: dict, cpus: int, sf_dir: str) -> dict:
+    """Warm the JVM/session once (container-reuse analog) and return the
+    prewarm stamps {cold_submit_sec, warm_submit_sec, artifact_build_sec}.
+
+    The prewarm measurement is the Tez paper's headline mechanism:
+    prewarmed AM/containers cut DAG-submission latency (TezConfiguration
+    prewarm; BASELINE.md cites the paper's cold/warm split). cold =
+    first-ever plan build + execution on the just-started JVM (pays
+    analysis, codegen compile, Python-worker fleet start); warm = the
+    identical call after the warm-up. Both run the flagship entry query
+    at sf0.001, so the delta is pure session state, not data.
+
+    The warm-up itself: one trivial Python stage absorbs the
+    Python-worker fleet startup, then every query runs once at the
+    SMALLEST fixture so each plan shape's codegen is compiled before
+    anything is timed (BASELINE.md's warm-session convention — the first
+    execution of a wide-agg plan like minhash pays ~2s of janino
+    compilation, which otherwise contaminates its first timed sample).
+    Generated code is data-size independent, so the sf0.001 pass hits
+    the same codegen cache."""
+    out = dict.fromkeys(
+        ("cold_submit_sec", "warm_submit_sec", "artifact_build_sec"))
     try:
         import __spark_entry__ as _entry_mod
 
-        t0 = time.monotonic()
-        _digest_action(_entry_mod.entry(spark))
-        cold_submit = round(time.monotonic() - t0, 3)
+        entry = lambda: _entry_mod.entry(spark)  # noqa: E731
+        out["cold_submit_sec"] = round(time_sample(entry)["wall_s"], 3)
     except Exception:
         pass
-
-    # warm the JVM/session once (container-reuse analog): one trivial
-    # Python stage absorbs the Python-worker fleet startup, then every
-    # query runs once at the SMALLEST fixture so each plan shape's
-    # codegen is compiled before anything is timed (BASELINE.md's
-    # warm-session convention — the first execution of a wide-agg plan
-    # like minhash pays ~2s of janino compilation, which otherwise
-    # contaminates its first timed sample). Generated code is data-size
-    # independent, so the sf0.001 pass hits the same codegen cache.
     try:
-        spark.range(1000).repartition(cpus).mapInPandas(
-            lambda it: it, "id long"
-        ).write.format("noop").mode("overwrite").save()
+        _digest_action(spark.range(1000).repartition(cpus).mapInPandas(
+            lambda it: it, "id long"))
     except Exception:
         pass
-    # Warm in the SAME sorted order the timing loop uses (registry order
-    # previously decided who got warmed, so a registry rotation silently
-    # changed which queries' first timed sample paid codegen — r5 saw
-    # dedup_clusters 3.5s -> 16.5s from exactly that). Budget 150s: the
-    # registry is ~95 queries and the expensive compiles (iterative CC,
-    # 128-agg minhash, 32-term simhash) sit mid-alphabet.
     warm_dir = os.environ.get("TEZ_SPARK_BENCH_WARM_SF", "/root/testdata/sf0.001")
-    warm_budget = float(os.environ.get("TEZ_SPARK_BENCH_WARM_BUDGET", "150"))
     if os.path.isdir(warm_dir):
-        warm_t0 = time.monotonic()
-        for name in sorted(queries):
-            if time.monotonic() - warm_t0 > warm_budget:
-                break  # never let warm-up starve the timing loop
-            try:
-                _digest_action(queries[name](spark, warm_dir))
-            except Exception:
-                pass
+        warm({n: (lambda q=q: q(spark, warm_dir)) for n, q in queries.items()})
     try:
-        if cold_submit is not None:
-            t0 = time.monotonic()
-            _digest_action(_entry_mod.entry(spark))
-            warm_submit = round(time.monotonic() - t0, 3)
+        if out["cold_submit_sec"] is not None:
+            out["warm_submit_sec"] = round(time_sample(entry)["wall_s"], 3)
     except Exception:
         pass
-
     # Materialize the session-shared corpus artifacts (shingle / band /
     # winnow / corpus signature tables) at the BENCH sf before timing:
     # they are session state shared by seven queries (the warm-session
     # protocol this bench declares — Tez prewarm parity), and leaving the
     # build inside the timing loop just charges its one-time cost to
     # whichever consumer sorts first alphabetically (curation_pipeline
-    # absorbed it in r5). The build cost itself is documented in PERF.md.
-    prewarm_build_sec = None
+    # absorbed it in r5). The one-time build seconds are recorded so the
+    # headline total can be reconstructed WITH them (ADVICE r5: don't
+    # leave the protocol's prewarm cost PERF.md-only).
     try:
         from tez_spark.operators.dedup import prewarm_corpus_artifacts
 
-        # the one-time artifact-build cost the timing loop no longer pays,
-        # recorded so the headline total can be reconstructed WITH it
-        # (ADVICE r5: don't leave the protocol's prewarm cost PERF.md-only)
-        prewarm_build_sec = prewarm_corpus_artifacts(spark, sf_dir)
+        out["artifact_build_sec"] = prewarm_corpus_artifacts(spark, sf_dir)
     except Exception:
         pass
+    return out
 
-    # Steal-aware sampling protocol (BASELINE.md convention is 3x-median;
-    # this host shows external CPU steal spikes of 10-40x with zero local
-    # processes, so the sample count adapts to the load the box is under
-    # when the bench starts, and the JSON records per-query sample counts
-    # + the loadavg window so a contaminated run is visible as data):
-    # - idle (load1 < 4): 3 samples, min (medians kept in diagnostics).
-    # - moderate: 2 samples, min — the less-contaminated one.
-    # - heavy steal: 1 sample; the loadavg field flags the number as dirty.
-    # Slow queries keep their full sample count until HALF the global
-    # budget is spent (a slow first sample is usually steal and needs the
-    # de-noising repeats most), then drop to 2 samples; once the whole
-    # budget is spent everything runs once — bounds total wall-clock
-    # against any driver timeout.
-    def _load1() -> float:
-        try:
-            return os.getloadavg()[0]
-        except OSError:
-            return 0.0
 
-    def _cpu_jiffies() -> tuple[int, int]:
-        """(steal, total) jiffies from /proc/stat — the direct hypervisor
-        steal signal. loadavg conflates our own local[32] tasks with
-        external contention; steal% separates them: a run with high load
-        but ~0% steal is self-load (clean), steal in the double digits
-        is the documented external-contention pathology."""
-        try:
-            with open("/proc/stat") as f:
-                parts = f.readline().split()
-            vals = [int(x) for x in parts[1:]]
-            steal = vals[7] if len(vals) > 7 else 0
-            return steal, sum(vals)
-        except Exception:
-            return 0, 0
+def _load1() -> float:
+    try:
+        return os.getloadavg()[0]
+    except OSError:
+        return 0.0
 
-    # Settle before deciding the policy: the 1-minute loadavg decays
-    # slowly, so a just-finished local job (the warm-up above, or the
-    # driver's own prior work) reads as "busy host" and would demote a
-    # genuinely idle run to fewer samples. Wait briefly for load1 < 4
-    # before sampling; give up after the settle budget (real steal).
-    settle_s = float(os.environ.get("TEZ_SPARK_BENCH_SETTLE", "45"))
+
+def sample_runs(cpus: int) -> tuple[int, float]:
+    """(runs, load1): the pass count of the steal-aware sampling protocol
+    and the loadavg it was chosen at.
+
+    BASELINE.md's convention is 3x-median; this host shows external CPU
+    steal spikes of 10-40x with zero local processes, so the sample count
+    adapts to the load the box is under when sampling starts, and the
+    JSON records per-query sample counts + the loadavg window so a
+    contaminated run is visible as data. Passes, not samples: each pass
+    executes a (sub-cutoff) query TWICE and keeps the pair min, so 2
+    passes = 4 executions / 2 burst-separated warm samples; under heavy
+    steal 1 pass, and the loadavg field flags the number as dirty.
+    $TEZ_SPARK_BENCH_RUNS overrides the count.
+
+    Settles first: the 1-minute loadavg decays slowly, so a just-finished
+    local job (the warm-up, or the driver's own prior work) reads as
+    "busy host" and would demote a genuinely idle run to fewer samples.
+    Waits for load1 < 4, giving up after SETTLE_S (real steal)."""
     settle_t0 = time.monotonic()
-    while _load1() >= 4 and time.monotonic() - settle_t0 < settle_s:
+    while _load1() >= 4 and time.monotonic() - settle_t0 < SETTLE_S:
         time.sleep(5)
+    load = _load1()
+    default_runs = "1" if load > max(8, cpus / 2) else "2"
+    return int(os.environ.get("TEZ_SPARK_BENCH_RUNS", default_runs)), load
 
-    load_start = _load1()
-    steal0, total0 = _cpu_jiffies()
-    # passes, not samples: each pass executes a (sub-cutoff) query TWICE
-    # and keeps the pair min, so 2 passes = 4 executions / 2
-    # burst-separated warm samples — the wall-clock of the old 3
-    # consecutive samples with strictly better noise behavior.
-    default_runs = "1" if load_start > max(8, cpus / 2) else "2"
-    runs = int(os.environ.get("TEZ_SPARK_BENCH_RUNS", default_runs))
-    slow_cutoff = float(os.environ.get("TEZ_SPARK_BENCH_SLOW_CUTOFF", "5.0"))
-    budget_s = float(os.environ.get("TEZ_SPARK_BENCH_BUDGET", "360"))
+
+def time_sample(build, spark=None) -> dict:
+    """One timed execution {"build_s", "wall_s"} from one t0: build_s
+    includes jobs the builder runs itself (CC convergence counts). With
+    `spark` it runs under observability.capture and carries "counters"."""
+    def run() -> dict:
+        t0 = time.monotonic()
+        df = build()
+        t1 = time.monotonic()
+        _digest_action(df)
+        return {"build_s": t1 - t0, "wall_s": time.monotonic() - t0}
+
+    if spark is None:
+        return run()
+    from tez_spark.observability import capture
+
+    sample, counters = capture(spark, run)
+    return {**sample, "counters": counters}
+
+
+def run_passes(builds: dict, runs: int, samples: dict, failed: dict,
+               spark=None) -> None:
+    """The sampler: one sample per pass into the caller's samples[name]
+    (so a SIGTERM emit sees them); an error goes to failed[name], once.
+
+    INTERLEAVED PAIRED passes (r6 protocol hardening, two observed
+    pathologies, one schedule):
+    (1) contention BURSTS of 3-15 s that only ever INFLATE and cover
+        CONSECUTIVE wall-clock spans — consecutive min-of-3 lets one
+        burst poison all of a query's samples (measured dedup_simhash
+        1.8 -> 7.9 s min-of-3 at 0.02% steal). Fix: one sample per FULL
+        PASS over the registry, so a query's samples sit tens of
+        seconds apart and a burst hits at most one.
+    (2) pure interleaving loses back-to-back warm state (JIT/cache
+        locality of the just-run plan): a full interleaved window
+        measured a UNIFORM ~1.3x on sub-second map-only queries vs the
+        consecutive schedule on a same-steal box. Fix: within a pass
+        each query executes TWICE back-to-back and the pass's sample is
+        the pair's min — the second execution is the steady-state cost.
+    Net: samples are warm AND burst-separated. Slow queries
+    (> SLOW_CUTOFF_S) skip the pairing (data work dominates warm-state
+    effects and the repeat would burn budget) and skip their 3rd+ pass
+    once half of BUDGET_S is spent; no new pass starts past the budget.
+    A pass keeps the pair's min-wall execution with the pair's min build_s."""
     bench_start = time.monotonic()
-    timings: dict[str, float] = {}
-    medians: dict[str, float] = {}
-    n_samples: dict[str, int] = {}
-    all_samples: dict[str, list[float]] = {n: [] for n in queries}
-    failed: set[str] = set()
-
-    def aggregate() -> None:
-        """min/median per query from whatever samples exist so far —
-        callable mid-run (SIGTERM partial emit) or at completion."""
-        for name, s in all_samples.items():
-            if name in failed or not s:
-                timings[name] = -1.0
-                n_samples[name] = len(s)
-                continue
-            # MIN of the samples: bursts only inflate, so the minimum is
-            # the least-contaminated observation of the warm plan's true
-            # cost and is what idle-box medians converge to. Medians stay
-            # in the diagnostics line for cross-checking.
-            s_sorted = sorted(s)
-            timings[name] = round(s_sorted[0], 3)
-            medians[name] = round(s_sorted[len(s_sorted) // 2], 3)
-            n_samples[name] = len(s)
-
-    def emit(partial: bool = False) -> None:
-        # Two lines, diagnostics FIRST and the headline line LAST: the
-        # driver keeps a bounded ~2000-char tail of stdout, so the LAST
-        # line must fit the tail WHOLE or the driver records parsed:null
-        # (r2's giant single line and r5's 99-query+prewarm line both
-        # overflowed it). The headline therefore carries only the contract
-        # fields (metric/value/unit/queries/sf) plus steal_pct, runs and
-        # partial, with as many per-query timings as fit (format_headline);
-        # everything else (loadavg, runs policy, prewarm latencies/build
-        # cost, 3dp medians, protocol tag) lives in the diagnostics line.
-        aggregate()
-        total = round(sum(t for t in timings.values() if t >= 0), 3)
-        # full-precision ORACLED subtotal (the paired-window numerator
-        # vs tools/bench_oracle.py): summing the quantized headline map
-        # instead mis-stated the r10 band by ~15% (69 zero-printed
-        # entries) — the stamp must come from the raw mins (r11)
-        try:
-            from tez_spark.plans.registry import all_oracles
-
-            ok = set(all_oracles())
-            total_oracled = round(
-                sum(t for n, t in timings.items() if t >= 0 and n in ok), 3
-            )
-        except Exception:
-            total_oracled = None
-        steal1, total1 = _cpu_jiffies()
-        dt = total1 - total0
-        steal_pct = round(100.0 * (steal1 - steal0) / dt, 2) if dt > 0 else 0.0
-        diag = {
-            "bench_diagnostics": {
-                "protocol": "min-of-n-v4-paired-interleaved-prewarmed",
-                "samples": {n: n_samples.get(n, 0) for n in sorted(queries)},
-                "medians": {n: medians[n] for n in sorted(medians)},
-                # full-fleet ms resolution (r17): the headline names only
-                # the queries that fit HEADLINE_BUDGET; the per-query
-                # MINS of EVERY query live here so each captured run
-                # (PERF.md window stamps, the low-core scaling block, A/B
-                # sweeps) has complete per-query data
-                "queries_ms": {
-                    n: int(round(timings[n] * 1000))
-                    for n in sorted(queries)
-                    if timings.get(n, -1.0) >= 0
-                },
-                "loadavg": [round(load_start, 2), round(_load1(), 2)],
-                # also in the headline; kept here so this line is
-                # self-contained
-                "steal_pct": steal_pct,
-                "total_oracled": total_oracled,
-                "runs_policy": runs,
-                "prewarm": {
-                    "cold_submit_sec": cold_submit,
-                    "warm_submit_sec": warm_submit,
-                    "artifact_build_sec": prewarm_build_sec,
-                },
-                # process-wide memo counters (tez_spark.memo): hits,
-                # misses, evictions and uncached builds
-                "memo": memo_stats(),
-            }
-        }
-        print(json.dumps(diag, separators=(",", ":")), flush=True)
-        line = {
-            "metric": "tez_spark_total_wall_clock",
-            "value": total,
-            "unit": "sec",
-            "queries": {},
-            "sf": sf,
-            "steal_pct": steal_pct,
-            # the sample count travels IN the headline (VERDICT r11 item
-            # 4): a load-degraded driver window stamps min-of-1 timings —
-            # systematically inflated on this host — and the diagnostics
-            # line that records runs_policy is exactly what the driver's
-            # 2000-char tail truncates first, so the shipped artifact
-            # must be classifiable alone. ACHIEVED floor, not the
-            # configured policy (r12 review: a burst that blows the
-            # budget breaks the pass loop after one pass, and stamping
-            # the policy's 2 would classify that min-of-1 artifact as
-            # min-of-2): the minimum sample count over queries that RAN
-            # (see achieved_runs — ADVICE r12, low — FIXED).
-            "runs": achieved_runs(n_samples, queries, failed),
-        }
-        if partial:
-            line["partial"] = True
-        print(format_headline(line, timings, queries), flush=True)
-
-    def on_term(signum, frame):  # killed by a driver timeout: still emit
-        emit(partial=True)
-        os._exit(0)
-
-    signal.signal(signal.SIGTERM, on_term)
-    signal.signal(signal.SIGINT, on_term)
-
-    # INTERLEAVED PAIRED passes (r6 protocol hardening, two observed
-    # pathologies, one schedule):
-    # (1) contention BURSTS of 3-15 s that only ever INFLATE and cover
-    #     CONSECUTIVE wall-clock spans — consecutive min-of-3 lets one
-    #     burst poison all of a query's samples (measured dedup_simhash
-    #     1.8 -> 7.9 s min-of-3 at 0.02% steal). Fix: one sample per FULL
-    #     PASS over the registry, so a query's samples sit tens of
-    #     seconds apart and a burst hits at most one.
-    # (2) pure interleaving loses back-to-back warm state (JIT/cache
-    #     locality of the just-run plan): a full interleaved window
-    #     measured a UNIFORM ~1.3x on sub-second map-only queries vs the
-    #     consecutive schedule on a same-steal box. Fix: within a pass
-    #     each query executes TWICE back-to-back and the pass's sample is
-    #     the pair's min — the second execution is the steady-state cost.
-    # Net: samples are warm AND burst-separated. Slow queries
-    # (> slow_cutoff) skip the pairing (data work dominates warm-state
-    # effects and the repeat would burn budget) and skip their 3rd+ pass
-    # once half the budget is spent; no new pass starts past the budget.
     for p in range(runs):
-        elapsed = time.monotonic() - bench_start
-        if p > 0 and elapsed > budget_s:
+        if p > 0 and time.monotonic() - bench_start > BUDGET_S:
             break
-        for name in sorted(queries):
+        for name in sorted(builds):
             if name in failed:
                 continue
-            s = all_samples[name]
-            slow = bool(s) and s[0] > slow_cutoff
+            s = samples[name]
+            slow = bool(s) and s[0]["wall_s"] > SLOW_CUTOFF_S
             if p > 1 and slow and (
-                time.monotonic() - bench_start > budget_s / 2
+                time.monotonic() - bench_start > BUDGET_S / 2
             ):
                 continue
             try:
-                t0 = time.monotonic()
-                _digest_action(queries[name](spark, sf_dir))
-                first = time.monotonic() - t0
-                if first <= slow_cutoff:
-                    t0 = time.monotonic()
-                    _digest_action(queries[name](spark, sf_dir))
-                    first = min(first, time.monotonic() - t0)
-                s.append(first)
+                pair = [time_sample(builds[name], spark)]
+                if pair[0]["wall_s"] <= SLOW_CUTOFF_S:
+                    pair.append(time_sample(builds[name], spark))
+                best = min(pair, key=lambda x: x["wall_s"])
+                s.append({**best, "build_s": min(x["build_s"] for x in pair)})
             except Exception as exc:  # never let one query kill the line
-                failed.add(name)
+                failed[name] = str(exc)[:200]
                 print(f"bench: {name} failed: {exc}", file=sys.stderr)
 
-    emit()
+
+def emit_headline(samples: dict, failed: dict, stamps: dict,
+                  partial: bool = False) -> None:
+    """Print the two lines, diagnostics FIRST and the headline line LAST:
+    the driver keeps a bounded ~2000-char tail of stdout, so the LAST
+    line must fit the tail WHOLE or the driver records parsed:null (r2's
+    giant single line and r5's 99-query+prewarm line both overflowed
+    it). The headline therefore carries only the contract fields
+    (metric/value/unit/queries/sf) plus steal_pct, runs, cpus and
+    partial, with as many per-query timings as fit (format_headline);
+    everything else (loadavg, runs policy, prewarm latencies/build cost,
+    3dp medians, build times, protocol tag) lives in the diagnostics
+    line."""
+    from tez_spark.memo import stats as memo_stats
+
+    # per query from whatever samples exist so far (a SIGTERM emit comes
+    # mid-run); a failed or unsampled query times -1. The MIN of the
+    # samples is the timing: bursts only inflate, so the minimum is the
+    # least-contaminated observation of the warm plan's true cost and is
+    # what idle-box medians converge to; medians stay in the diagnostics
+    # line for cross-checking. builds: min build_s over every execution.
+    timings, medians, n_samples, builds = {}, {}, {}, {}
+    for name, s in samples.items():
+        n_samples[name] = len(s)
+        if name in failed or not s:
+            timings[name] = -1.0
+            continue
+        walls = sorted(x["wall_s"] for x in s)
+        timings[name] = round(walls[0], 3)
+        medians[name] = round(walls[len(walls) // 2], 3)
+        builds[name] = round(min(x["build_s"] for x in s), 3)
+    names = sorted(samples)
+    total = round(sum(t for t in timings.values() if t >= 0), 3)
+    # full-precision ORACLED subtotal (the paired-window numerator
+    # vs tools/bench_oracle.py): summing the quantized headline map
+    # instead mis-stated the r10 band by ~15% (69 zero-printed
+    # entries) — the stamp must come from the raw mins (r11)
+    try:
+        from tez_spark.plans.registry import all_oracles
+
+        ok = set(all_oracles())
+        total_oracled = round(
+            sum(t for n, t in timings.items() if t >= 0 and n in ok), 3
+        )
+    except Exception:
+        total_oracled = None
+    steal0, total0 = stamps["jiffies"]
+    steal1, total1 = cpu_jiffies()
+    dt = total1 - total0
+    steal_pct = round(100.0 * (steal1 - steal0) / dt, 2) if dt > 0 else 0.0
+    diag = {
+        "bench_diagnostics": {
+            "protocol": "min-of-n-v4-paired-interleaved-prewarmed",
+            "samples": {n: n_samples.get(n, 0) for n in names},
+            "medians": {n: medians[n] for n in sorted(medians)},
+            # full-fleet ms resolution (r17): the headline names only
+            # the queries that fit HEADLINE_BUDGET; the per-query
+            # MINS of EVERY query live here so each captured run
+            # (PERF.md window stamps, the low-core scaling block, A/B
+            # sweeps) has complete per-query data
+            "queries_ms": {
+                n: int(round(timings[n] * 1000))
+                for n in names
+                if timings.get(n, -1.0) >= 0
+            },
+            # plan-build share of each query: min over every timed
+            # execution, build-time jobs included; <= queries_ms
+            "build_ms": {n: int(round(builds[n] * 1000)) for n in sorted(builds)},
+            "loadavg": [round(stamps["load_start"], 2), round(_load1(), 2)],
+            # also in the headline; kept here so this line is
+            # self-contained
+            "steal_pct": steal_pct,
+            "total_oracled": total_oracled,
+            "runs_policy": stamps["runs"],
+            "prewarm": stamps["prewarm"],
+            # process-wide memo counters (tez_spark.memo): hits,
+            # misses, evictions and uncached builds
+            "memo": memo_stats(),
+        }
+    }
+    print(json.dumps(diag, separators=(",", ":")), flush=True)
+    line = {
+        "metric": "tez_spark_total_wall_clock",
+        "value": total,
+        "unit": "sec",
+        "queries": {},
+        "sf": stamps["sf_dir"].rstrip("/").rsplit("sf", 1)[-1],
+        "steal_pct": steal_pct,
+        # the sample count travels IN the headline (VERDICT r11 item
+        # 4): a load-degraded driver window stamps min-of-1 timings —
+        # systematically inflated on this host — and the diagnostics
+        # line that records runs_policy is exactly what the driver's
+        # 2000-char tail truncates first, so the shipped artifact
+        # must be classifiable alone. ACHIEVED floor, not the
+        # configured policy (r12 review: a burst that blows the
+        # budget breaks the pass loop after one pass, and stamping
+        # the policy's 2 would classify that min-of-1 artifact as
+        # min-of-2): the minimum sample count over queries that RAN
+        # (see achieved_runs — ADVICE r12, low — FIXED).
+        "runs": achieved_runs(n_samples, names, failed),
+        # local[cpus]: totals at different core counts are not comparable
+        "cpus": stamps["cpus"],
+    }
+    if partial:
+        line["partial"] = True
+    print(format_headline(line, timings, names), flush=True)
+
+
+def job_row(samples: list) -> dict:
+    """The min-wall captured sample as wall time, serialized driver jobs,
+    stages, shuffle bytes and executor ms."""
+    best = min(samples, key=lambda x: x["wall_s"])
+    c = best["counters"]
+    return {
+        "wall_sec": round(best["wall_s"], 3),
+        "n_jobs": c.get("NUM_JOBS", 0),
+        "n_stages": c.get("NUM_STAGES", 0),
+        "shuffle_bytes": c.get("SHUFFLE_BYTES_WRITTEN", 0),
+        "executor_ms": c.get("EXECUTOR_RUN_TIME_MS", 0),
+    }
+
+
+def write_jobs(samples: dict, failed: dict, stamps: dict,
+               partial: bool = False) -> None:
+    """Write the --jobs histogram (a job_row or error per query, plus
+    totals) to stamps["jobs_out"], then print the floor fleet: the
+    queries paying the most driver round-trips for <1 MB exchanges."""
+    results = {
+        n: job_row(s) if s and n not in failed
+        else {"error": failed.get(n, "not sampled")}
+        for n, s in sorted(samples.items())
+    }
+    ok = [(n, r) for n, r in results.items() if "error" not in r]
+    summary = {
+        "sf_dir": stamps["sf_dir"],
+        "cpus": stamps["cpus"],
+        "total_wall_sec": round(sum(r["wall_sec"] for _, r in ok), 2),
+        "total_jobs": sum(r["n_jobs"] for _, r in ok),
+        "n_queries": len(ok),
+        "queries": results,
+    }
+    if partial:
+        summary["partial"] = True
+    with open(stamps["jobs_out"], "w") as f:
+        json.dump(summary, f, indent=1, sort_keys=True)
+    print("== top driver-round-trip payers (jobs desc, <1MB shuffle) ==")
+    floor = sorted(
+        (r["n_jobs"], n, r) for n, r in ok if r["shuffle_bytes"] < 1 << 20
+    )
+    for n_jobs, n, r in reversed(floor[-25:]):
+        print(f"{n:32s} jobs={n_jobs:3d} stages={r['n_stages']:3d} "
+              f"wall={r['wall_sec']:6.2f}s shuf={r['shuffle_bytes']:>9d}B")
+    print(f"total: {summary['total_wall_sec']}s wall, {summary['total_jobs']} "
+          f"jobs, {len(ok)} queries -> {stamps['jobs_out']}", flush=True)
+
+
+def run(spark, sf_dir: str, cpus: int, queries: dict,
+        jobs_out: str | None = None) -> None:
+    """The whole protocol on a live session, then the headline, or the
+    job histogram at `jobs_out`. A SIGTERM or SIGINT (a driver timeout)
+    mid-sampling still emits, marked partial, and exits 0."""
+    stamps = {"sf_dir": sf_dir, "cpus": cpus, "jobs_out": jobs_out,
+              "prewarm": warm_up(spark, queries, cpus, sf_dir)}
+    stamps["runs"], stamps["load_start"] = sample_runs(cpus)
+    # /proc/stat steal jiffies — the direct hypervisor steal signal.
+    # loadavg conflates our own local[32] tasks with external contention;
+    # steal% separates them: a run with high load but ~0% steal is
+    # self-load (clean), steal in the double digits is the documented
+    # external-contention pathology.
+    stamps["jiffies"] = cpu_jiffies()
+    samples: dict[str, list] = {n: [] for n in queries}
+    failed: dict[str, str] = {}
+    emit = write_jobs if jobs_out else emit_headline
+
+    def on_term(signum, frame):
+        emit(samples, failed, stamps, partial=True)
+        os._exit(0)
+
+    handlers = {s: signal.signal(s, on_term)
+                for s in (signal.SIGTERM, signal.SIGINT)}
+    try:
+        run_passes({n: (lambda q=q: q(spark, sf_dir)) for n, q in queries.items()},
+                   stamps["runs"], samples, failed, spark if jobs_out else None)
+    finally:
+        for s, h in handlers.items():
+            signal.signal(s, h)
+    emit(samples, failed, stamps)
+
+
+def main(argv=None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--jobs", metavar="OUT.json",
+                    help="write the job histogram here, not the headline")
+    args = ap.parse_args(argv)
+    spark, sf_dir, cpus = session_from_env()
+    run(spark, sf_dir, cpus, select_queries(), args.jobs)
     spark.stop()
 
 

@@ -27,6 +27,7 @@ def _line(partial: bool = False, runs: int = 1) -> dict:
         "sf": "/root/testdata/sf0.1",
         "steal_pct": 99.99,
         "runs": runs,
+        "cpus": 32,
     }
     if partial:
         d["partial"] = True
@@ -191,21 +192,25 @@ def test_headline_keeps_2dp_precision_when_it_fits():
 
 def test_headline_ms_enrichment_is_additions_only():
     """Naming queries only ever adds to the contract line: every field
-    the caller put in the line survives byte-identical, and the only
-    keys the headline adds are the queries map and its two counts."""
-    names = _real_names()
+    the caller put in the line (cpus included) survives byte-identical
+    at the live registry, 125 and 200 names, and the only keys the
+    headline adds are the queries map and its two counts."""
+    real = _real_names()
     rng = random.Random(17)
-    timings = {n: round(rng.uniform(0.05, 4.0), 3) for n in names}
-    line = _line()
-    base = json.dumps({k: v for k, v in line.items() if k != "queries"},
-                      separators=(",", ":"))
-    parsed = _headline(timings, names)
-    added = set(parsed) - set(json.loads(base))
-    assert added <= {"queries", "queries_omitted", "queries_failed"}
-    kept = {k: v for k, v in parsed.items() if k not in added}
-    assert json.dumps(kept, separators=(",", ":")) == base
-    for n, v in parsed["queries"].items():
-        assert v == round(timings[n], 3)
+    for n_names in (len(real), 125, 200):
+        names = real + [f"extra_q{i:03d}" for i in range(n_names - len(real))]
+        timings = {n: round(rng.uniform(0.05, 4.0), 3) for n in names}
+        line = _line()
+        base = json.dumps({k: v for k, v in line.items() if k != "queries"},
+                          separators=(",", ":"))
+        parsed = _headline(timings, names)
+        assert parsed["cpus"] == line["cpus"]
+        added = set(parsed) - set(json.loads(base))
+        assert added <= {"queries", "queries_omitted", "queries_failed"}
+        kept = {k: v for k, v in parsed.items() if k not in added}
+        assert json.dumps(kept, separators=(",", ":")) == base
+        for n, v in parsed["queries"].items():
+            assert v == round(timings[n], 3)
 
 
 def test_headline_partial_ds_drop_keeps_largest_subsecond_entries():

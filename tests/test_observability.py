@@ -20,7 +20,7 @@ def test_capture_q08_shuffle_counters_nonzero(spark):
     assert counters["SHUFFLE_RECORDS_WRITTEN"] > 0, counters
     assert counters["NUM_STAGES"] >= 2, counters
     assert counters["EXECUTOR_RUN_TIME_MS"] > 0, counters
-    # NUM_JOBS (r12, feeds tools/job_histogram.py): the captured group
+    # NUM_JOBS (r12, feeds `bench.py --jobs`): the captured group
     # ran at least one job, and never more jobs than stages
     assert 1 <= counters["NUM_JOBS"] <= counters["NUM_STAGES"], counters
 

@@ -1637,10 +1637,10 @@ def prewarm_corpus_artifacts(spark: SparkSession, sf_dir: str) -> float:
     """Materialize the session-shared corpus artifacts (shingle / LSH
     band / winnow / incremental signature-store tables) and return the
     build seconds — THE warm-session prewarm protocol bench.py declares
-    (Tez prewarm parity). Shared by bench.py and tools/job_histogram.py
-    (r12 review: two hand-copied prewarm blocks meant a new shared
-    artifact could silently diverge the histogram's floor attribution
-    from the bench protocol it mirrors)."""
+    (Tez prewarm parity). bench.py's warm-up calls it for the headline
+    run and for `--jobs` alike (r12 review: two hand-copied prewarm
+    blocks meant a new shared artifact could silently diverge the
+    histogram's floor attribution from the bench protocol it mirrors)."""
     import time as _time
 
     t0 = _time.monotonic()

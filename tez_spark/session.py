@@ -151,11 +151,8 @@ def get_spark(
         # Whole-stage-codegen compile cache (static conf): the default
         # 100 entries thrashes under a 119-query registry (~5 codegen
         # fragments each), paying serialized janino recompiles on every
-        # warm pass. Env-overridable for A/B (set 100 for stock).
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("TEZ_SPARK_CODEGEN_CACHE", "4096"),
-        )
+        # warm pass (the A/B against stock 100 is PERF.md r12).
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     if event_log_dir is not None:
         os.makedirs(event_log_dir, exist_ok=True)

@@ -23,6 +23,7 @@ analyzable anywhere. Prints one JSON object with a section per analyzer;
 empty sections mean "nothing to report" (no spill, no hung tasks, ...),
 which is itself the finding on a healthy run.
 """
+import argparse
 import json
 import os
 import sys
@@ -107,27 +108,16 @@ def analyze(path: str, top: int = 20, infer_one_on_one: bool = False,
 
 
 if __name__ == "__main__":
-    argv = sys.argv[1:]
-    infer = "--infer-one-on-one" in argv
-    diff = None
-    args: list[str] = []
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a == "--infer-one-on-one":
-            i += 1
-        elif a.startswith("--diff"):
-            diff = a.split("=", 1)[1] if "=" in a else argv[i + 1]
-            i += 1 if "=" in a else 2
-        else:
-            args.append(a)
-            i += 1
-    if not args:
-        sys.exit(__doc__)
-    top = int(args[1]) if len(args) > 1 else 20
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("path")
+    ap.add_argument("top", nargs="?", type=int, default=20)
+    ap.add_argument("--infer-one-on-one", action="store_true")
+    ap.add_argument("--diff")
+    args = ap.parse_args()
     print(
         json.dumps(
-            analyze(args[0], top, infer_one_on_one=infer, diff=diff),
+            analyze(args.path, args.top,
+                    infer_one_on_one=args.infer_one_on_one, diff=args.diff),
             indent=1,
             default=str,
         )

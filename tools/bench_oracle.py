@@ -1,10 +1,10 @@
 """Measure the DuckDB oracle baseline over every oracled registry query.
 
 Run from the repo root: python tools/bench_oracle.py [sf_dir]
-Prints one JSON line {query: median_sec} + total — the BASELINE.md
-"DuckDB, all oracled queries" row. Protocol: 3 runs per query, median,
-single in-process DuckDB connection with the fixture tables registered
-as views (exactly what the correctness driver does).
+Prints one JSON line: {query: min_sec} + total, medians alongside — the
+BASELINE.md "DuckDB, all oracled queries" row. Protocol: min and median
+of 3 runs per query on one in-process DuckDB connection with the fixture
+tables registered as views (exactly what the correctness driver does).
 """
 import json
 import os

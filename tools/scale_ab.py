@@ -20,12 +20,12 @@ results land in PERF.md round 11.
 
 from __future__ import annotations
 
+import argparse
 import json
 import math
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -106,37 +106,9 @@ def gen_fixture(scale: int) -> str:
     return out
 
 
-def main() -> None:
-    scales = [1, 3, 10]
-    out_path = "/tmp/scale_ab.json"
-    only: set[str] | None = None
-    args = sys.argv[1:]
-    i = 0
-    while i < len(args):
-        a = args[i]
-        # accept both --flag=value and --flag value (r11 review: the
-        # docstring's space-separated form crashed, and --out was
-        # parsed nowhere)
-        if a.startswith("--scales"):
-            val = a.split("=", 1)[1] if "=" in a else args[i + 1]
-            scales = [int(s) for s in val.split(",")]
-            i += 1 if "=" in a else 2
-        elif a.startswith("--out"):
-            out_path = a.split("=", 1)[1] if "=" in a else args[i + 1]
-            i += 1 if "=" in a else 2
-        elif a.startswith("--only"):
-            val = a.split("=", 1)[1] if "=" in a else args[i + 1]
-            only = {s.strip() for s in val.split(",")}
-            i += 1 if "=" in a else 2
-        else:
-            i += 1
-
-    from tez_spark.observability import capture
-    from tez_spark.operators.core import release_caches
-    from tez_spark.session import get_spark
-
-    spark = get_spark(app_name="scale_ab", cpus=32, shuffle_partitions=32)
-
+def build_cases(spark) -> list:
+    """[(name, fn(sf_dir) -> DataFrame, max_scale)]: registry queries,
+    then two attribution cases measured apart from them."""
     from tez_spark.plans.registry import all_queries
 
     reg = all_queries()
@@ -239,73 +211,76 @@ def main() -> None:
         )
 
     cases.append(("cc_tail_planted_pairs", _cc_planted, None))
-    if only is not None:
+    return cases
+
+
+def fit_exponents(by_scale: dict) -> dict | None:
+    """Exponent log(b/a) / log(r) of each metric between the smallest and
+    largest scale in {"x1": row, "x10": row, ...} (r: their ratio). A
+    metric zero at either end is skipped; one scale has no fit (None)."""
+    ks = sorted(by_scale, key=lambda k: int(k[1:]))
+    lo, hi = ks[0], ks[-1]
+    r = int(hi[1:]) / int(lo[1:])
+    if r <= 1:
+        return None
+    exps = {}
+    for metric in ("wall_sec", "shuffle_bytes", "executor_ms"):
+        a, b = by_scale[lo][metric], by_scale[hi][metric]
+        if a and b:
+            exps[metric] = round(math.log(b / a) / math.log(r), 2)
+    return exps
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--scales", default=[1, 3, 10],
+                    type=lambda v: [int(s) for s in v.split(",")],
+                    help="comma list of multiples of the sf0.1 row counts")
+    ap.add_argument("--out", default="/tmp/scale_ab.json")
+    ap.add_argument("--only", help="comma list: run a subset of the case list")
+    args = ap.parse_args()
+
+    import bench
+    from tez_spark.operators.core import release_caches
+
+    # bench's protocol on local[$SPARK_GRAFT_CPUS]: a warm run (codegen
+    # + artifact build excluded from timing), then captured passes
+    spark, _, cpus = bench.session_from_env("scale_ab")
+    cases = build_cases(spark)
+    if args.only:
+        only = {s.strip() for s in args.only.split(",")}
         unknown = only - {n for n, _, _ in cases}
         if unknown:
             sys.exit(f"--only names not in the case list: {sorted(unknown)}")
         cases = [c for c in cases if c[0] in only]
-
+    runs, _ = bench.sample_runs(cpus)
     results: dict[str, dict] = {}
-    for scale in scales:
+    for scale in args.scales:
         sf_dir = gen_fixture(scale)
         print(f"=== scale x{scale}: {sf_dir}", file=sys.stderr, flush=True)
-        for name, fn, cap in cases:
-            if cap is not None and scale > cap:
-                continue
-            # warm run (codegen + artifact build excluded from timing,
-            # like bench prewarm), then min-of-2 timed
-            try:
-                fn(sf_dir).write.format("noop").mode("overwrite").save()
-            except Exception as exc:
-                print(f"{name}@x{scale} FAILED: {exc}", file=sys.stderr)
-                continue
-            best = None
-            counters = None
-            for _ in range(2):
-                t0 = time.monotonic()
-                _, c = capture(
-                    spark,
-                    lambda: fn(sf_dir)
-                    .write.format("noop")
-                    .mode("overwrite")
-                    .save(),
-                )
-                w = time.monotonic() - t0
-                if best is None or w < best:
-                    best, counters = w, c
-            row = {
-                "wall_sec": round(best, 3),
-                "shuffle_bytes": counters.get("SHUFFLE_BYTES_WRITTEN", 0),
-                "executor_ms": counters.get("EXECUTOR_RUN_TIME_MS", 0),
-                # r17: serialized driver jobs — flat job counts across
-                # scales are the direct evidence a shape adds no
-                # per-scale driver rounds
-                "n_jobs": counters.get("NUM_JOBS", 0),
-            }
-            results.setdefault(name, {}).setdefault("scales", {})[
-                f"x{scale}"
-            ] = row
-            print(f"{name}@x{scale}: {row}", file=sys.stderr, flush=True)
+        builds = {name: (lambda fn=fn: fn(sf_dir))
+                  for name, fn, cap in cases if cap is None or scale <= cap}
+        bench.warm(builds)
+        samples = {n: [] for n in builds}
+        bench.run_passes(builds, runs, samples, {}, spark)
+        # n_jobs (r17): flat job counts across scales are the direct
+        # evidence a shape adds no per-scale driver rounds
+        for name, s in samples.items():
+            if s:  # bench printed any failure
+                row = bench.job_row(s)
+                results.setdefault(name, {"scales": {}})["scales"][f"x{scale}"] = row
+                print(f"{name}@x{scale}: {row}", file=sys.stderr, flush=True)
         release_caches()
 
-    # fitted exponent between the smallest and largest measured scale,
-    # emitted under a sibling key so scale keys and metric keys never
+    # exponents under a sibling key so scale keys and metric keys never
     # coexist in one dict (ADVICE r11: consumers iterating scale keys
     # had to special-case the exponent entries)
-    for name, entry in results.items():
-        by_scale = entry["scales"]
-        ks = sorted(by_scale, key=lambda k: int(k[1:]))
-        lo, hi = ks[0], ks[-1]
-        r = int(hi[1:]) / int(lo[1:])
-        if r > 1:
-            exps = {}
-            for metric in ("wall_sec", "shuffle_bytes", "executor_ms"):
-                a, b = by_scale[lo][metric], by_scale[hi][metric]
-                if a and b:
-                    exps[metric] = round(math.log(b / a) / math.log(r), 2)
+    for entry in results.values():
+        exps = fit_exponents(entry["scales"])
+        if exps is not None:
             entry["exponents"] = exps
     print(json.dumps(results, indent=1))
-    with open(out_path, "w") as f:
+    with open(args.out, "w") as f:
         json.dump(results, f, indent=1)
     spark.stop()
 
