@@ -107,6 +107,7 @@ spark.stop()
     assert json.loads(proc.stdout.strip().splitlines()[-1])["groups"] == 13
 
     from tez_spark.observability import (
+        _history_files,
         load_history,
         skew_report_from_history,
         stage_report_from_history,
@@ -129,6 +130,22 @@ spark.stop()
     assert any(r["SHUFFLE_BYTES"] > 0 for r in ranked) or any(
         s["SHUFFLE_BYTES_WRITTEN"] > 0 for s in history["stages"]
     )
+
+    # the deserialize layer: each stage's successful tasks' "Executor
+    # Deserialize Time", summed — checked against a direct read of the log
+    deser: dict[int, int] = {}
+    for f in _history_files(log_dir):
+        with open(f) as fh:
+            for line in fh:
+                ev = json.loads(line)
+                if (ev.get("Event") == "SparkListenerTaskEnd"
+                        and ev["Task End Reason"]["Reason"] == "Success"):
+                    deser[ev["Stage ID"]] = deser.get(ev["Stage ID"], 0) + int(
+                        ev["Task Metrics"]["Executor Deserialize Time"]
+                    )
+    assert sum(deser.values()) > 0, "no task deserialization time in the log"
+    for r in ranked:
+        assert r["deserialize_ms"] == deser.get(r["stage_id"], 0), r
 
 
 def test_capture_isolates_concurrent_work(spark):

@@ -178,8 +178,12 @@ def _skew_rows(
 
 
 def _stage_rank_rows(
-    stage_rows: list[dict[str, Any]], top: int
+    stage_rows: list[dict[str, Any]],
+    top: int,
+    extra: tuple[tuple[str, str], ...] = (),
 ) -> list[dict[str, Any]]:
+    """Completed stages ranked by executor run time; `extra` names
+    (output key, stage field) pairs to carry per row."""
     stages = [s for s in stage_rows if s["status"] == "COMPLETE"]
     total = sum(s["EXECUTOR_RUN_TIME_MS"] for s in stages) or 1
     ranked = sorted(stages, key=lambda s: -s["EXECUTOR_RUN_TIME_MS"])[:top]
@@ -191,6 +195,7 @@ def _stage_rank_rows(
             "share": s["EXECUTOR_RUN_TIME_MS"] / total,
             "SHUFFLE_BYTES": s["SHUFFLE_BYTES"],
             "SPILLED_BYTES_DISK": s["SPILLED_BYTES_DISK"],
+            **{key: s[field] for key, field in extra},
         }
         for s in ranked
     ]
@@ -236,6 +241,7 @@ _HISTORY_METRIC_FIELDS: tuple[tuple[str, str], ...] = (
     ("Disk Bytes Spilled", "SPILLED_BYTES_DISK"),
     ("Executor Run Time", "EXECUTOR_RUN_TIME_MS"),
     ("Executor CPU Time", "EXECUTOR_CPU_TIME_NS"),
+    ("Executor Deserialize Time", "EXECUTOR_DESERIALIZE_TIME_MS"),
     ("JVM GC Time", "GC_TIME_MS"),
 )
 
@@ -488,9 +494,15 @@ def skew_report_from_history(
 def stage_report_from_history(
     history: dict[str, Any] | str, top: int = 20
 ) -> list[dict[str, Any]]:
-    """stage_report over a persisted event log (path or load_history dict)."""
+    """stage_report over a persisted event log (path or load_history dict),
+    plus each stage's summed task deserialization time. That is the
+    per-task floor a stage pays before it runs: a task whose closure
+    carries a large lineage (a cached frame's whole plan, big codegen
+    sources) shows it here, not in run time."""
     h = load_history(history) if isinstance(history, str) else history
-    return _stage_rank_rows(h["stages"], top)
+    return _stage_rank_rows(
+        h["stages"], top, extra=(("deserialize_ms", "EXECUTOR_DESERIALIZE_TIME_MS"),)
+    )
 
 
 def spill_report_from_history(

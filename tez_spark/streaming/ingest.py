@@ -44,12 +44,15 @@ def maintain_dedup(
 
     - `store_dir`: parquet signature store; seeded here with the corpus
       split's shingles + bands (in production: carried over from the
-      previous snapshot), then appended per committed micro-batch.
+      previous snapshot), then grown by one subdir per micro-batch.
     - `stream_dir`: directory of parquet files, one micro-batch each
       (maxFilesPerTrigger=1).
     - `report(pairs_df, batch_id)`: receives each batch's near-dup pairs
       (da = already-ingested doc, db = newly arrived doc, j) — the
-      quarantine/drop decision hook.
+      quarantine/drop decision hook. `pairs_df` is planned over the
+      batch's shingle and band subdirs, written BEFORE the report, so
+      its tasks read signature files rather than carry the minhash
+      lineage (a Tez consumer reads its producer's materialized output).
     - `compact_every`: auto-compaction policy (VERDICT r15 item 2b) —
       when set, the store's committed per-batch delta subdirs are folded
       into the seed whenever their count exceeds this, inside the
@@ -69,13 +72,16 @@ def maintain_dedup(
     from tez_spark.sources.catalog import load_table
 
     # Store layout: one subdirectory per contribution ("seed" + one per
-    # committed micro-batch). Per-batch subdirectories make the
-    # post-report append IDEMPOTENT: a batch replayed after a crash
-    # (foreachBatch re-delivers the in-flight batch id on restart)
-    # OVERWRITES its own subdir instead of double-appending signatures —
-    # double rows would skew every downstream Jaccard via inflated na/nb
-    # counts. The read side EXCLUDES the in-flight batch's own subdir
-    # (see store_table) so the replayed report is also identical.
+    # micro-batch). Each batch writes its subdirs FIRST and reports from
+    # them, so a batch_{id} subdir exists from the start of the batch,
+    # not only once it commits. Per-batch subdirectories make that write
+    # IDEMPOTENT: a batch replayed after a crash (foreachBatch
+    # re-delivers the in-flight batch id on restart) OVERWRITES its own
+    # subdir instead of double-appending signatures — double rows would
+    # skew every downstream Jaccard via inflated na/nb counts. The read
+    # side EXCLUDES the in-flight batch's own subdir (see store_table),
+    # and compaction keeps the highest-numbered batch out of its fold,
+    # so the replayed report is also identical.
     sh_store = os.path.join(store_dir, "shingles")
     band_store = os.path.join(store_dir, "bands")
     _recover_swap(sh_store)
@@ -94,22 +100,35 @@ def maintain_dedup(
 
     schema = "doc_id long, text string"
 
-    def store_table(store: str, exclude_batch_id: int) -> DataFrame:
+    def store_table(store: str, exclude_batch_id: int, read_schema) -> DataFrame:
         # Exclude the in-flight batch's OWN subdir (maintain_ann's
         # store_vectors pattern, r15 self-audit): the per-batch writes
         # are pure functions of the batch, so the STORE is replay-safe
-        # either way — but a crash between the signature commit and the
-        # checkpoint commit would otherwise leave the replayed batch
-        # joining against its own signatures, reporting every batch doc
-        # as a j=1.0 self-pair and every within-batch pair twice (once
-        # via the store copy, once via the within-batch branch).
+        # either way — but the batch's signatures are on disk before its
+        # report, so the batch (and its replay after a crash anywhere
+        # before the checkpoint commit) would otherwise join against its
+        # own signatures, reporting every batch doc as a j=1.0 self-pair
+        # and every within-batch pair twice (once via the store copy,
+        # once via the within-batch branch). The seed and every batch
+        # subdir share the schema of the frame just written, so it is
+        # passed in: no footer-inference job per read.
         subs = sorted(
             d
             for d in os.listdir(store)
             if d != f"batch_{exclude_batch_id}"
             and os.path.isdir(os.path.join(store, d))
         )
-        return spark.read.parquet(*[os.path.join(store, d) for d in subs])
+        return spark.read.schema(read_schema).parquet(
+            *[os.path.join(store, d) for d in subs]
+        )
+
+    def write_batch(df: DataFrame, store: str, batch_id: int) -> DataFrame:
+        # Overwrite the batch's own subdir (idempotent under replay) and
+        # read it back with the known schema: consumers scan files, so
+        # the writing plan's lineage never rides along in their tasks.
+        path = os.path.join(store, f"batch_{batch_id}")
+        df.write.mode("overwrite").parquet(path)
+        return spark.read.schema(df.schema).parquet(path)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         from tez_spark.operators.core import release_caches, tracked_persist
@@ -121,10 +140,23 @@ def maintain_dedup(
             compact_dedup_store(
                 spark, store_dir, _owner_bypass_active_check=True
             )
-        micro_sh = tracked_persist(shingles(batch_df, "doc_id", "text", n=3))
-        micro_bands = tracked_persist(band_signatures(minhash_signatures(micro_sh)))
-        store_bands = store_table(band_store, exclude_batch_id=batch_id)
-        store_sh = store_table(sh_store, exclude_batch_id=batch_id)
+        # Write the batch's signatures FIRST, then report from the files:
+        # a persisted frame would make every reading task carry its whole
+        # lineage (a cache miss recomputes inside the task), here the
+        # codegen of the 128-term minhash aggregate and the 32-band
+        # array — the dominant per-task deserialization cost. A doc never
+        # pairs with itself: the cross join reads the store WITHOUT this
+        # batch's subdir, and within-batch pairs come from the da<db
+        # self-join. LATER batches see the subdirs once this batch's
+        # checkpoint commits.
+        micro_sh = write_batch(
+            shingles(batch_df, "doc_id", "text", n=3), sh_store, batch_id
+        )
+        micro_bands = write_batch(
+            band_signatures(minhash_signatures(micro_sh)), band_store, batch_id
+        )
+        store_bands = store_table(band_store, batch_id, micro_bands.schema)
+        store_sh = store_table(sh_store, batch_id, micro_sh.schema)
         cross = (
             micro_bands.alias("b")
             .join(
@@ -142,18 +174,6 @@ def maintain_dedup(
             F.col("j") >= threshold
         )
         report(pairs, batch_id)
-        # commit AFTER reporting: the batch's signatures join the store so
-        # every LATER batch sees these docs; a doc never pairs with itself
-        # because its own batch used the pre-commit store for the cross
-        # join and the da<db self-join for within-batch pairs. Overwrite
-        # of the batch's OWN subdir keeps a crash-replayed batch
-        # idempotent (see layout note above).
-        micro_sh.write.mode("overwrite").parquet(
-            os.path.join(sh_store, f"batch_{batch_id}")
-        )
-        micro_bands.write.mode("overwrite").parquet(
-            os.path.join(band_store, f"batch_{batch_id}")
-        )
 
     stream = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", "1"
@@ -435,9 +455,9 @@ def maintain_decontaminate(
             .agg(F.count(F.lit(1)).alias("n_new_shared_grams"))
         )
         report(inc, batch_id)
-        # commit AFTER reporting (maintain_dedup's ordering): later
-        # batches treat these grams as seen; overwrite of the batch's
-        # own subdir keeps a crash-replayed batch idempotent
+        # commit AFTER reporting: later batches treat these grams as
+        # seen; overwrite of the batch's own subdir keeps a
+        # crash-replayed batch idempotent
         new_g.write.mode("overwrite").parquet(
             os.path.join(gram_store, f"batch_{batch_id}")
         )

@@ -12,6 +12,7 @@ below) to stdout and writes nothing.
 import os, re, sys
 sys.path.insert(0, ".")
 from tez_spark.session import get_spark
+from tez_spark.operators.core import release_caches, release_shared
 from tez_spark.plans.registry import all_queries, all_oracles
 
 SF = "/root/testdata/sf0.01"
@@ -29,6 +30,11 @@ if sys.argv[1:2] == ["--dump"]:
 
 rows = []
 for name, fn in qs.items():
+    # every row plans from a cold cache: a shared artifact or persisted
+    # intermediate memoized by an earlier row would otherwise stand in
+    # for its lineage and change this row's counts with registry order
+    release_caches()
+    release_shared(spark)
     try:
         df = fn(spark, SF)
         plan = df._jdf.queryExecution().executedPlan().toString()
