@@ -1041,6 +1041,27 @@ def _write_doc_batches(spark, stream_dir, rows_per_batch):
         shutil.rmtree(os.path.join(stream_dir, f"t{i}"))
 
 
+def _holdout_texts(spark, n):
+    """Texts of n holdout documents (md5(doc_id) >= "e6"), the split
+    maintain_decontaminate builds its holdout gram table from."""
+    from tez_spark.sources.catalog import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+    h = F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8"))
+    return [
+        r.text
+        for r in docs.filter(F.substring(h, 1, 2) >= "e6")
+        .select("text")
+        .limit(n)
+        .collect()
+    ]
+
+
+def _rounded(row):
+    """A report row as a tuple, floats rounded to 6 decimals."""
+    return tuple(round(v, 6) if isinstance(v, float) else v for v in row)
+
+
 def _assert_interrupted_swap_recovers(delta_dir):
     """Shared tail assertion: simulate the crash window between the two
     swap renames (live store gone, compacted twin present — carrying
@@ -1363,25 +1384,40 @@ def test_maintain_dedup_crash_replay_reports_no_self_pairs(spark, tmp_path):
     assert replayed == first, "crash replay diverged from the original report"
 
 
-def test_maintain_dedup_report_crash_replays_to_clean_pairs(spark, tmp_path):
-    """maintain_dedup writes a batch's shingle and band subdirs BEFORE
-    it reports. A report that raises on the first delivery of batch 0
-    leaves those subdirs on disk with no checkpoint commit; re-running
-    on the same store and checkpoint replays batch 0 and must report
-    exactly the pairs of a clean run — no self-pairs, no duplicates —
-    including the later batch's pairs against the replayed docs."""
-    from tez_spark.streaming.ingest import maintain_dedup
+@pytest.mark.parametrize(
+    "maintain, tables",
+    [
+        ("maintain_dedup", ("shingles", "bands")),
+        ("maintain_decontaminate", ("grams",)),
+        ("maintain_exactsubstr", ("gramfreq",)),
+    ],
+    ids=["maintain_dedup", "maintain_decontaminate", "maintain_exactsubstr"],
+)
+def test_report_crash_replays_to_clean_reports(spark, tmp_path, maintain, tables):
+    """Every maintain_* writes a batch's delta subdirs BEFORE it reports.
+    A report that raises on the first delivery of batch 0 leaves those
+    subdirs on disk with no checkpoint commit; re-running on the same
+    store and checkpoint replays batch 0 and must report exactly what a
+    clean run reports — no self-pairs, no duplicates — including the
+    later batch's report against the replayed batch's delta."""
+    from tez_spark.streaming import ingest
 
     base = " ".join(f"ddcrash_{i:03d}" for i in range(30))
     near = base[: -len("_029")] + "zzzz"
     nearer = base[: -len("_028 ddcrash_029")] + "yyyy zzzz"
     batches = [[(9_910_001, base), (9_910_002, near)], [(9_910_003, nearer)]]
+    if maintain == "maintain_decontaminate":
+        # contamination needs holdout text; batch 1 repeats batch 0's
+        hold = _holdout_texts(spark, 2)
+        batches = [
+            [(9_910_001, hold[0])], [(9_910_002, hold[0]), (9_910_003, hold[1])]
+        ]
 
     def run(store, stream_dir, out):
-        maintain_dedup(
+        getattr(ingest, maintain)(
             spark, SF_DIR, str(store), stream_dir,
-            lambda pairs, bid: out.setdefault(bid, []).extend(
-                (r.da, r.db, round(r.j, 6)) for r in pairs.collect()
+            lambda df, bid: out.setdefault(bid, []).extend(
+                _rounded(r) for r in df.collect()
             ),
         )
 
@@ -1389,27 +1425,32 @@ def test_maintain_dedup_report_crash_replays_to_clean_pairs(spark, tmp_path):
     _write_doc_batches(spark, clean_stream, batches)
     clean: dict = {}
     run(tmp_path / "store_clean", clean_stream, clean)
-    assert any(da == 9_910_001 and db == 9_910_003 for da, db, _ in clean[1])
+    assert clean.get(0) and clean.get(1), clean
+    if maintain == "maintain_dedup":
+        assert any(da == 9_910_001 and db == 9_910_003 for da, db, _ in clean[1])
 
     stream_dir = str(tmp_path / "s")
     _write_doc_batches(spark, stream_dir, batches)
     store = tmp_path / "store"
 
-    def crashing_report(pairs, batch_id):
+    def crashing_report(df, batch_id):
         raise RuntimeError("report crashed on its first delivery")
 
     with pytest.raises(Exception, match="report crashed"):
-        maintain_dedup(spark, SF_DIR, str(store), stream_dir, crashing_report)
-    for table in ("shingles", "bands"):
+        getattr(ingest, maintain)(
+            spark, SF_DIR, str(store), stream_dir, crashing_report
+        )
+    for table in tables:
         assert os.path.isdir(store / table / "batch_0"), (
             f"{table}/batch_0 was not written before the report"
         )
 
     replayed: dict = {}
     run(store, stream_dir, replayed)
-    for bid, pairs in replayed.items():
-        assert not any(da == db for da, db, _ in pairs), (bid, pairs)
-        assert len(pairs) == len(set(pairs)), f"batch {bid} reported a pair twice"
+    for bid, rows in replayed.items():
+        if maintain == "maintain_dedup":
+            assert not any(da == db for da, db, _ in rows), (bid, rows)
+        assert len(rows) == len(set(rows)), f"batch {bid} reported a row twice"
     assert {b: sorted(p) for b, p in replayed.items()} == {
         b: sorted(p) for b, p in clean.items()
     }
@@ -1438,6 +1479,80 @@ def test_maintain_dedup_report_plan_reads_signature_files(spark, tmp_path):
 
     maintain_dedup(spark, SF_DIR, str(tmp_path / "store"), stream_dir, report)
     assert len(plans) == 1
+
+
+def test_maintain_decontaminate_report_plan_reads_gram_files(spark, tmp_path):
+    """The increments handed to report are planned over the batch's
+    written gram subdir: a parquet scan of grams/batch_0 and no
+    InMemoryRelation — the report's tasks never carry the new-gram
+    lineage."""
+    from tez_spark.streaming.ingest import maintain_decontaminate
+
+    stream_dir = str(tmp_path / "s")
+    _write_doc_batches(
+        spark, stream_dir, [[(9_930_001, _holdout_texts(spark, 1)[0])]]
+    )
+    plans: list[str] = []
+
+    def report(inc, batch_id):
+        rows = inc.collect()
+        plan = inc._jdf.queryExecution().executedPlan().toString()
+        plans.append(plan)
+        assert "InMemoryRelation" not in plan, plan
+        assert "FileScan parquet" in plan, plan
+        batch_files = os.path.join("store", "grams", "batch_0", "")
+        assert any(batch_files in f for f in inc.inputFiles()), inc.inputFiles()
+        assert rows, "a holdout text reported no contamination"
+
+    maintain_decontaminate(
+        spark, SF_DIR, str(tmp_path / "store"), stream_dir, report
+    )
+    assert len(plans) == 1
+
+
+def test_crash_during_seeding_reseeds_the_store(spark, tmp_path):
+    """A killed Spark write leaves its target dir behind holding only
+    _temporary/. A store whose seed write was killed must be seeded
+    again on the next run, not streamed against as an empty seed: a
+    batch carrying an exact copy of a corpus doc reports the same pairs
+    as on a clean store — for a killed band seed write (shingle seed
+    complete) and for a killed shingle seed write (no band seed)."""
+    import shutil
+
+    from tez_spark.sources.catalog import load_table
+    from tez_spark.streaming.ingest import maintain_dedup
+
+    docs = load_table(spark, SF_DIR, "documents")
+    h = F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8"))
+    doc = (
+        docs.filter((F.substring(h, 1, 2) < "e6") & (F.length("text") >= 200))
+        .orderBy("doc_id")
+        .first()
+    )
+    stream_dir = str(tmp_path / "s")
+    _write_doc_batches(spark, stream_dir, [[(99_000_001, doc.text)]])
+
+    def run(store):
+        out: list = []
+        maintain_dedup(
+            spark, SF_DIR, str(store), stream_dir,
+            lambda pairs, bid: out.extend(_rounded(r) for r in pairs.collect()),
+        )
+        return sorted(out)
+
+    clean = run(tmp_path / "clean")
+    assert (doc.doc_id, 99_000_001, 1.0) in clean, clean
+
+    bands_killed = tmp_path / "bands_killed"
+    shutil.copytree(
+        tmp_path / "clean" / "shingles" / "seed",
+        bands_killed / "shingles" / "seed",
+    )
+    os.makedirs(bands_killed / "bands" / "seed" / "_temporary" / "0")
+    shingles_killed = tmp_path / "shingles_killed"
+    os.makedirs(shingles_killed / "shingles" / "seed" / "_temporary" / "0")
+    for store in (bands_killed, shingles_killed):
+        assert run(store) == clean, store.name
 
 
 def test_compact_refuses_live_stream(spark, tmp_path):
@@ -1523,35 +1638,42 @@ def test_second_concurrent_stream_refused(spark, tmp_path):
     _release_stream_lock(lock)
 
 
-def test_long_ingest_auto_compaction_bounds_store(spark, tmp_path):
-    """VERDICT r15 item 2b end-to-end: a ~20-batch ingest with
-    compact_every=4 reports value-identically to an uncompacted twin
-    while the store's delta-subdir count stays bounded by the policy
-    (the uncompacted twin's grows linearly with batch count) — the
+@pytest.mark.parametrize(
+    "maintain, tables, n_batches, compact_every",
+    [
+        ("maintain_decontaminate", ("grams",), 20, 4),
+        ("maintain_exactsubstr", ("gramfreq",), 6, 2),
+        ("maintain_dedup", ("shingles", "bands"), 6, 2),
+    ],
+    ids=["maintain_decontaminate", "maintain_exactsubstr", "maintain_dedup"],
+)
+def test_long_ingest_auto_compaction_bounds_store(
+    spark, tmp_path, maintain, tables, n_batches, compact_every
+):
+    """VERDICT r15 item 2b end-to-end: an ingest with compact_every set
+    reports value-identically to an uncompacted twin while each store
+    table's delta-subdir count stays bounded by the policy (the
+    uncompacted twin's grows linearly with batch count) — the
     operational property that keeps a year-long streaming ingest's
-    per-trigger store read O(compact_every) instead of O(batches)."""
-    from tez_spark.streaming.ingest import maintain_decontaminate
+    per-trigger store read O(compact_every) instead of O(batches). From
+    batch 3 on, each batch also repeats the doc of three batches
+    earlier, whose prior-side state lives in a compacted seed by then:
+    exactsubstr retro-reports its singleton witness through the
+    gram-frequency fold, dedup pairs it through the folded shingle and
+    band seeds."""
+    from tez_spark.streaming import ingest
 
-    N_BATCHES = 20
     batches = [
         [(9_720_000 + i, " ".join(f"auto_{i:02d}_w{j:03d}" for j in range(20)))]
-        for i in range(N_BATCHES)
+        for i in range(n_batches)
     ]
     # make some batches share grams with the holdout corpus: append a
     # few real holdout docs' texts so increments are non-trivial
-    from tez_spark.sources.catalog import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    h = F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8"))
-    hold_texts = [
-        r.text
-        for r in docs.filter(F.substring(h, 1, 2) >= "e6")
-        .select("text")
-        .limit(6)
-        .collect()
-    ]
-    for i, t in enumerate(hold_texts):
-        batches[3 * i + 1].append((9_730_000 + i, t))
+    for i, t in enumerate(_holdout_texts(spark, 6)):
+        if 3 * i + 1 < n_batches:
+            batches[3 * i + 1].append((9_730_000 + i, t))
+    for i in range(3, n_batches):
+        batches[i].append((9_740_000 + i, batches[i - 3][0][1]))
 
     s_auto, s_plain = str(tmp_path / "sa"), str(tmp_path / "sp")
     _write_doc_batches(spark, s_auto, batches)
@@ -1559,33 +1681,35 @@ def test_long_ingest_auto_compaction_bounds_store(spark, tmp_path):
 
     def run(store, stream_dir, compact_every):
         out: dict[int, list] = {}
-        maintain_decontaminate(
+        getattr(ingest, maintain)(
             spark, SF_DIR, str(store), stream_dir,
-            lambda inc, bid: out.update(
-                {bid: sorted(tuple(r) for r in inc.collect())}
+            lambda df, bid: out.update(
+                {bid: sorted(_rounded(r) for r in df.collect())}
             ),
             compact_every=compact_every,
         )
         return out
 
-    auto = run(tmp_path / "store_a", s_auto, 4)
+    auto = run(tmp_path / "store_a", s_auto, compact_every)
     plain = run(tmp_path / "store_p", s_plain, None)
-    assert len(auto) == N_BATCHES
+    assert len(auto) == n_batches
     assert auto == plain, "auto-compaction changed a report"
+    assert any(auto[b] for b in range(3, n_batches)), "nothing reported after a fold"
 
-    def n_batch_dirs(store):
-        g = os.path.join(str(store), "grams")
+    def n_batch_dirs(store, table):
+        g = os.path.join(str(store), table)
         return sum(1 for d in os.listdir(g) if d.startswith("batch_"))
 
-    assert n_batch_dirs(tmp_path / "store_p") == N_BATCHES
-    # bounded: at most compact_every uncompacted deltas + the kept one
-    assert n_batch_dirs(tmp_path / "store_a") <= 4 + 1, sorted(
-        os.listdir(os.path.join(str(tmp_path / "store_a"), "grams"))
-    )
+    for table in tables:
+        assert n_batch_dirs(tmp_path / "store_p", table) == n_batches
+        # bounded: at most compact_every uncompacted deltas + the kept one
+        assert n_batch_dirs(tmp_path / "store_a", table) <= compact_every + 1, sorted(
+            os.listdir(os.path.join(str(tmp_path / "store_a"), table))
+        )
 
     # a restart over the compacted store resumes cleanly (no reseed, no
     # replay) — compaction left store + checkpoint + marker consistent
-    replay = run(tmp_path / "store_a", s_auto, 4)
+    replay = run(tmp_path / "store_a", s_auto, compact_every)
     assert replay == {}
 
 
