@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
+
 from tests.conftest import SF_DIR
 
 
@@ -14,8 +17,8 @@ def test_lsh_recall_vs_brute_force(spark):
     got = {(r.q_id, r.vec_id) for r in ann_lsh_neighbors(spark, SF_DIR).collect()}
     assert truth, "brute force returned nothing"
     recall = len(truth & got) / len(truth)
-    # 4 tables x 8 planes on random 64-dim data: generous floor; the point
-    # is the pipeline shape, tuning comes from table/plane counts.
+    # 12 tables x 4 planes on random 64-dim data: generous floor; the
+    # point is the pipeline shape, tuning comes from table/plane counts.
     assert recall >= 0.3, f"LSH recall collapsed: {recall:.2f}"
 
 
@@ -30,7 +33,7 @@ def test_ivf_recall_vs_brute_force(spark):
     }
     assert truth, "brute force returned nothing"
     recall = len(truth & got) / len(truth)
-    # nprobe/cells = 16/64 on uniform-random data (IVF's worst case —
+    # nprobe/cells = 20/64 on uniform-random data (IVF's worst case —
     # neighbors barely concentrate in cells). Measured ~0.6 at sf0.1;
     # generous floor for fixture variation across scales.
     assert recall >= 0.3, f"IVF recall collapsed: {recall:.2f}"
@@ -38,31 +41,32 @@ def test_ivf_recall_vs_brute_force(spark):
     assert len(got) == len(truth)
 
 
-def test_ivf_contract_query_agrees_with_neighbor_surface(spark):
-    """The oracled q_ann_ivf contract rows must be DERIVABLE from the
-    two surfaces they summarize: k_returned == the neighbor query's
-    per-query row count, and recall_ok == (ann_ivf_neighbors ∩
-    q_ann_topk nonempty per query) — i.e. the fused single-pass plan
-    computes the same thing as running the two queries separately."""
+@pytest.mark.parametrize(
+    "neighbors, contract",
+    [("ann_ivf_neighbors", "q_ann_ivf"), ("ann_lsh_neighbors", "q_ann_lsh")],
+    ids=["ann_ivf", "ann_lsh"],
+)
+def test_contract_query_agrees_with_neighbor_surface(spark, neighbors, contract):
+    """An oracled recall contract's rows must be DERIVABLE from the two
+    surfaces they summarize: k_returned == the neighbor query's
+    per-query row count, and recall_ok == (neighbors ∩ q_ann_topk
+    nonempty per query) — i.e. the fused single-pass plan computes the
+    same thing as running the two queries separately."""
     from collections import defaultdict
 
-    from tez_spark.operators.similarity import (
-        ann_ivf_neighbors,
-        q_ann_ivf,
-        q_ann_topk,
-    )
+    import tez_spark.operators.similarity as sim
 
     truth = defaultdict(set)
-    for r in q_ann_topk(spark, SF_DIR).collect():
+    for r in sim.q_ann_topk(spark, SF_DIR).collect():
         truth[r.q_id].add(r.vec_id)
-    ivf = defaultdict(set)
-    for r in ann_ivf_neighbors(spark, SF_DIR).collect():
-        ivf[r.q_id].add(r.vec_id)
-    contract = {r.q_id: r for r in q_ann_ivf(spark, SF_DIR).collect()}
-    assert set(contract) == set(truth)
+    got = defaultdict(set)
+    for r in getattr(sim, neighbors)(spark, SF_DIR).collect():
+        got[r.q_id].add(r.vec_id)
+    rows = {r.q_id: r for r in getattr(sim, contract)(spark, SF_DIR).collect()}
+    assert set(rows) == set(truth)
     for q in truth:
-        assert contract[q].k_returned == len(ivf[q])
-        assert contract[q].recall_ok == bool(truth[q] & ivf[q])
+        assert rows[q].k_returned == len(got[q])
+        assert rows[q].recall_ok == bool(truth[q] & got[q])
 
 
 def test_ivf_assign_builds_reusable_index(spark):
@@ -114,8 +118,8 @@ def test_all_pairs_cosine_matches_numpy(spark):
 
 def test_dedup_embedding_lsh_finds_planted_dups(spark):
     """Planted near-dups (cosine ≈ 0.99) must be recovered by the LSH
-    candidate path: per-pair miss probability at cos≈0.99 is ~1e-6 with
-    8 tables x 4 planes, so an exact-recovery assertion is stable."""
+    candidate path: per-pair miss probability at cos≈0.99 is ~5e-10 with
+    12 tables x 4 planes, so an exact-recovery assertion is stable."""
     import numpy as np
 
     from tez_spark.operators.similarity import dedup_embedding_lsh
@@ -316,20 +320,14 @@ def test_ensure_ivf_index_atomic_build(spark, tmp_path, monkeypatch):
     index carries the _COMPLETE marker written before the rename."""
     import os
 
-    from pyspark.sql import functions as F
-
     from tez_spark.operators.similarity import ensure_ivf_index
-    from tez_spark.sources.catalog import load_table
 
     monkeypatch.setenv("TMPDIR", str(tmp_path))
     import tempfile
 
     tempfile.tempdir = None  # force re-read of TMPDIR
     try:
-        emb = load_table(spark, SF_DIR, "embeddings")
-        corpus = emb.filter(F.col("vec_id") % 2 == 0)
-
-        idx = ensure_ivf_index(corpus, SF_DIR)
+        idx = ensure_ivf_index(spark, SF_DIR)
         assert os.path.exists(os.path.join(idx, "_COMPLETE"))
         assert os.path.exists(os.path.join(idx, "vectors"))
 
@@ -339,10 +337,32 @@ def test_ensure_ivf_index_atomic_build(spark, tmp_path, monkeypatch):
 
         shutil.rmtree(os.path.join(idx, "vectors"))
         os.remove(os.path.join(idx, "_COMPLETE"))
-        idx2 = ensure_ivf_index(corpus, SF_DIR)
+        idx2 = ensure_ivf_index(spark, SF_DIR)
         assert idx2 == idx
         assert os.path.exists(os.path.join(idx, "_COMPLETE"))
         assert os.path.exists(os.path.join(idx, "vectors"))
+    finally:
+        tempfile.tempdir = None
+
+
+def test_ensure_ivf_index_is_keyed_on_build_constants(spark, tmp_path, monkeypatch):
+    """The on-disk index memo is keyed on what the index is built from,
+    not on the fixture path alone: a changed IVF_CELLS gets a new path,
+    built with that cell count, instead of the index built before."""
+    import tempfile
+
+    import tez_spark.operators.similarity as sim
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    tempfile.tempdir = None  # force re-read of TMPDIR
+    try:
+        n_default = sim.IVF_CELLS
+        default = sim.ensure_ivf_index(spark, SF_DIR)
+        monkeypatch.setattr(sim, "IVF_CELLS", 8)
+        small = sim.ensure_ivf_index(spark, SF_DIR)
+        assert small != default
+        assert sim._load_centroids(spark, small).shape[0] == 8
+        assert sim._load_centroids(spark, default).shape[0] == n_default
     finally:
         tempfile.tempdir = None
 
@@ -398,28 +418,65 @@ def test_recall_contracts_hold_at_driver_sfs(spark):
         )
 
 
-def test_brute_force_chunked_equals_single_collect(spark):
-    """Forced multi-chunk exact top-k (query_chunk_rows=7 over ~20
-    queries): per-query top-k composes across chunks, so the chunked
-    result must equal the single-collect path exactly — the
-    driver-bounded audit mode q_ann_incremental uses for its
-    corpus-scaled batch (r11, the probe_chunk_rows pattern)."""
-    from pyspark.sql import functions as F
+# ---------------------------------------------------------------------------
+# Map-side top-k kernels against a plain sort (numpy only, no Spark)
+# ---------------------------------------------------------------------------
 
-    from tez_spark.operators.similarity import brute_force_topk
-    from tez_spark.sources.catalog import load_table
+# Integer-valued vectors: every dot product is exact in float64, so the
+# kernels and the reference see identical sims, and exact ties are real.
+_IDS = np.array([7, 3, 9, 1, 5, 2])
+_V = np.array([[1, 0], [1, 0], [0, 1], [1, 0], [1, 1], [0, 1]], dtype=np.float64)
+_Q_IDS = np.array([3, 100])  # query 3 is in the batch: no self-pair
+_Q = np.array([[1, 0], [1, 1]], dtype=np.float64)
 
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 20)
-    assert queries.count() > 7  # forces >= 2 chunks
-    single = {
-        (r.q_id, r.vec_id, r.rn)
-        for r in brute_force_topk(emb, queries, 5).collect()
-    }
-    chunked = {
-        (r.q_id, r.vec_id, r.rn)
-        for r in brute_force_topk(
-            emb, queries, 5, query_chunk_rows=7
-        ).collect()
-    }
-    assert chunked == single
+
+def _want(q_ids, rows, k):
+    """Reference per-query top-k: sorted by (-sim, id), first k."""
+    out = []
+    for j, q in enumerate(q_ids):
+        cand = [
+            (float(_V[r] @ _Q[j]), int(_IDS[r]))
+            for r in rows(j)
+            if _IDS[r] != q
+        ]
+        out += [(int(q), i, s) for s, i in sorted(cand, key=lambda t: (-t[0], t[1]))[:k]]
+    return out
+
+
+def _got(pdf, id_col="vec_id"):
+    return list(zip(pdf["q_id"].tolist(), pdf[id_col].tolist(), pdf["sim"].tolist()))
+
+
+@pytest.mark.parametrize("k", [1, 2, 3, 100])
+def test_local_topk_matches_plain_sort(k):
+    from tez_spark.operators.similarity import _local_topk
+
+    S = _V @ _Q.T
+    mask = np.array([[True, False], [True, True], [False, True],
+                     [True, True], [False, False], [True, True]])
+    got = _local_topk(S, _IDS, _Q_IDS, k)
+    assert _got(got) == _want(_Q_IDS, lambda j: range(len(_IDS)), k)
+
+    both = _local_topk(S, _IDS, _Q_IDS, k, mask, "approx")
+    exact = both[both["path"] == "exact"]
+    approx = both[both["path"] == "approx"]
+    assert _got(exact) == _want(_Q_IDS, lambda j: range(len(_IDS)), k)
+    assert _got(approx) == _want(_Q_IDS, lambda j: np.nonzero(mask[:, j])[0], k)
+
+    none = _local_topk(S, _IDS, _Q_IDS, k, np.zeros_like(mask), "approx")
+    assert (none["path"] == "exact").all() and len(none) == len(exact)
+
+
+@pytest.mark.parametrize("k", [1, 2, 3, 100])
+def test_candidate_topk_matches_plain_sort(k):
+    from tez_spark.operators.similarity import _candidate_topk
+
+    mask = np.array([[True, False], [True, True], [False, True],
+                     [True, True], [True, False], [True, True]])
+    got = _candidate_topk(_V, _IDS, _Q_IDS, _Q, mask, k)
+    want = _want(_Q_IDS, lambda j: np.nonzero(mask[:, j])[0], k)
+    assert sorted(_got(got), key=lambda t: (t[0], -t[2], t[1])) == want
+    assert got.dtypes.tolist() == [np.int64, np.int64, np.float64]
+
+    none = _candidate_topk(_V, _IDS, _Q_IDS, _Q, np.zeros_like(mask), k)
+    assert len(none) == 0 and list(none.columns) == ["q_id", "vec_id", "sim"]

@@ -150,6 +150,7 @@ def maintain_ann(
     `report(topk_df, batch_id)` receives (q_id, vec_id, sim, rn) rows.
     """
     from tez_spark.operators.similarity import (
+        _incremental_split,
         _load_centroids,
         ann_ivf_probe_index,
         ivf_assign,
@@ -169,9 +170,7 @@ def maintain_ann(
     # means a crash mid-seed-build followed by a stream restart rebuilds
     # instead of probing a vectors-less or partial index.
     if not os.path.exists(os.path.join(idx, "_COMPLETE")):
-        emb = load_table(spark, sf_dir, "embeddings")
-        h = F.md5(F.encode(F.col("vec_id").cast("string"), "UTF-8"))
-        corpus = emb.filter(F.substring(h, 1, 2) < "e6")
+        corpus, _ = _incremental_split(load_table(spark, sf_dir, "embeddings"))
         scratch = f"{idx}.build-{uuid.uuid4().hex[:12]}"
         write_ivf_index(corpus, scratch)
         with open(os.path.join(scratch, "_COMPLETE"), "w") as f:
