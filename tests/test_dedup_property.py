@@ -31,7 +31,8 @@ def test_minhash_lsh_equals_exact_on_random_corpora(spark):
     from tez_spark.operators.dedup import (
         _pair_jaccard,
         _verify_pairs,
-        lsh_candidates,
+        band_signatures,
+        candidates_from_bands,
         minhash_signatures,
         shingles,
     )
@@ -44,7 +45,11 @@ def test_minhash_lsh_equals_exact_on_random_corpora(spark):
             (r.da, r.db, round(r.j, 9))
             for r in _pair_jaccard(sh).filter(F.col("j") >= 0.8).collect()
         }
-        cand = tracked_persist(lsh_candidates(minhash_signatures(sh)))
+        cand = tracked_persist(
+            candidates_from_bands(
+                tracked_persist(band_signatures(minhash_signatures(sh)))
+            )
+        )
         got = {
             (r.da, r.db, round(r.j, 9))
             for r in _verify_pairs(cand, sh).filter(F.col("j") >= 0.8).collect()
@@ -62,30 +67,6 @@ def test_connected_components_known_graph(spark):
     )
     got = {(r.component, r.doc_id) for r in connected_components(pairs).collect()}
     assert got == {(1, 1), (1, 2), (1, 3), (1, 4), (7, 7), (7, 9)}
-
-
-def test_prefix_filtered_jaccard_equals_naive(spark):
-    """pair_jaccard_at (prefix-filtered exact join) must produce exactly
-    the naive all-pairs result at every threshold — prefix filtering is
-    a pure pruning, never a recall trade."""
-    from pyspark.sql import functions as F2
-
-    from tez_spark.operators.core import release_caches, tracked_persist
-    from tez_spark.operators.dedup import _pair_jaccard, pair_jaccard_at, shingles
-
-    for seed, t in ((5, 0.8), (23, 0.6)):
-        release_caches()
-        docs = spark.createDataFrame(_corpus(seed), "doc_id long, text string")
-        sh = tracked_persist(shingles(docs, "doc_id", "text", n=3))
-        naive = {
-            (r.da, r.db, round(r.j, 9))
-            for r in _pair_jaccard(sh).filter(F2.col("j") >= t).collect()
-        }
-        fast = {
-            (r.da, r.db, round(r.j, 9)) for r in pair_jaccard_at(sh, t).collect()
-        }
-        assert naive, f"seed {seed}: no pairs at t={t}"
-        assert fast == naive, f"seed {seed} t={t}: {fast ^ naive}"
 
 
 def test_winnow_true_pairs_share_two_fingerprints(spark):

@@ -903,3 +903,37 @@ def test_jvm_expr_memo_reuses_and_isolates_keys(spark):
     r2 = spark.range(5).select(*a).collect()
     assert [tuple(r) for r in r1] == [(0, 1), (2, 2), (4, 3)]
     assert len(r2) == 5
+
+
+def test_new_batch_is_the_one_split_predicate(spark):
+    """The md5 train/holdout split has one definition, core.new_batch:
+    the Python literal "e6" occurs in engine code exactly once, inside
+    it (the DuckDB oracles restate the split in their SQL text, which
+    holds no such literal). Its text is pinned: ensure_ivf_index's
+    on-disk tag hashes str(new_batch("vec_id")), so a changed text
+    rebuilds the index and leaves the old one behind."""
+    import ast
+    import pathlib
+
+    import tez_spark
+    from tez_spark.operators.core import new_batch
+
+    root = pathlib.Path(tez_spark.__file__).parent
+    hits = [
+        (path.relative_to(root).as_posix(), node.lineno)
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant) and node.value == "e6"
+    ]
+    core = ast.parse((root / "operators" / "core.py").read_text())
+    (fn,) = [
+        n for n in core.body
+        if isinstance(n, ast.FunctionDef) and n.name == "new_batch"
+    ]
+    assert len(hits) == 1, hits
+    path, line = hits[0]
+    assert path == "operators/core.py" and fn.lineno <= line <= fn.end_lineno
+    assert str(new_batch("vec_id")) == (
+        "Column<'>=(substring(md5(encode(CAST(vec_id AS STRING), 'UTF-8')),"
+        " 1, 2), 'e6')'>"
+    )

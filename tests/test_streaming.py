@@ -303,12 +303,16 @@ def test_incremental_rollup_upserts_match_batch(spark, oracle):
     )
 
 
-def test_streaming_ingest_dedup_matches_incremental_batch(spark, tmp_path):
-    """maintain_dedup: streaming the new-batch docs through in several
-    micro-batches against the growing signature store must find exactly
-    the pairs the batch dedup_incremental query reports — corpus hits
-    AND pairs between docs that arrived in different micro-batches —
-    each exactly once."""
+@pytest.mark.parametrize("n_batches", [1, 3])
+def test_streaming_ingest_dedup_matches_incremental_batch(spark, tmp_path, n_batches):
+    """maintain_dedup: streaming the new-batch docs through in
+    n_batches micro-batches against the growing signature store must
+    find exactly the pairs the batch dedup_incremental query reports —
+    corpus hits AND pairs between docs that arrived in different
+    micro-batches — each exactly once. One micro-batch is the registry
+    query's own step over written files, so its rows equal the query's
+    as they stand; over several, arrival order orients a pair of two
+    arrivals, so those compare unordered."""
     from pyspark.sql import functions as F
 
     from tez_spark.plans.registry import all_queries
@@ -321,9 +325,9 @@ def test_streaming_ingest_dedup_matches_incremental_batch(spark, tmp_path):
 
     stream_dir = str(tmp_path / "arrivals")
     os.makedirs(stream_dir)
-    # three arrival files -> three micro-batches (maxFilesPerTrigger=1)
-    for i in range(3):
-        batch_docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
+    # one arrival file per micro-batch (maxFilesPerTrigger=1)
+    for i in range(n_batches):
+        batch_docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.parquet(
             os.path.join(stream_dir, f"arrival_{i}")
         )
     # flatten: the file-stream source wants files, not subdirs
@@ -342,15 +346,16 @@ def test_streaming_ingest_dedup_matches_incremental_batch(spark, tmp_path):
 
     def report(pairs, batch_id):
         batches.add(batch_id)
-        for r in pairs.collect():
-            got.append((r.da, r.db, round(r.j, 6)))
+        got.extend(tuple(r) for r in pairs.collect())
 
     maintain_dedup(
         spark, SF_DIR, str(tmp_path / "store"), stream_dir, report
     )
-    assert len(batches) >= 3, "stream did not split into micro-batches"
+    assert len(batches) == n_batches, "stream did not split into micro-batches"
 
     want_rows = all_queries()["dedup_incremental"](spark, SF_DIR).collect()
+    if n_batches == 1:
+        assert sorted(got) == [tuple(r) for r in want_rows]
     batch_ids = {r.doc_id for r in batch_docs.select("doc_id").collect()}
 
     def norm(a, b, j):
@@ -358,9 +363,9 @@ def test_streaming_ingest_dedup_matches_incremental_batch(spark, tmp_path):
         # but id order in batch — compare as unordered
         if a in batch_ids and b in batch_ids:
             a, b = min(a, b), max(a, b)
-        return (a, b, j)
+        return (a, b, round(j, 6))
 
-    want = {norm(r.da, r.db, round(r.j, 6)) for r in want_rows}
+    want = {norm(*r) for r in want_rows}
     got_set = {norm(*g) for g in got}
     assert len(got) == len(got_set), "a pair was reported twice"
     assert got_set == want
@@ -571,9 +576,10 @@ def test_streaming_ann_crash_replay_probes_prior_content_only(spark, tmp_path):
     assert replayed == first, "crash replay diverged from the original report"
 
 
-def test_maintain_decontaminate_matches_batch_query(spark, tmp_path):
+@pytest.mark.parametrize("n_batches", [1, 3])
+def test_maintain_decontaminate_matches_batch_query(spark, tmp_path, n_batches):
     """maintain_decontaminate: streaming the TRAIN split through in
-    several micro-batches against the growing distinct-gram store must
+    n_batches micro-batches against the growing distinct-gram store must
     report, summed per holdout doc, exactly the batch
     decontaminate_ngram query's n_shared_grams — each distinct shared
     gram contributing once, via the first batch that carried it — and a
@@ -594,8 +600,8 @@ def test_maintain_decontaminate_matches_batch_query(spark, tmp_path):
 
     stream_dir = str(tmp_path / "arrivals")
     os.makedirs(stream_dir)
-    for i in range(3):
-        train_docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
+    for i in range(n_batches):
+        train_docs.filter(F.col("doc_id") % n_batches == i).coalesce(1).write.parquet(
             os.path.join(stream_dir, f"arrival_{i}")
         )
     for i, f in enumerate(
@@ -616,7 +622,7 @@ def test_maintain_decontaminate_matches_batch_query(spark, tmp_path):
     maintain_decontaminate(
         spark, SF_DIR, str(tmp_path / "store"), stream_dir, report
     )
-    assert len(batches) >= 3, "stream did not split into micro-batches"
+    assert len(batches) == n_batches, "stream did not split into micro-batches"
 
     want_rows = all_queries()["decontaminate_ngram"](spark, SF_DIR).collect()
     want = {r.doc_id: r.n_shared_grams for r in want_rows if r.n_shared_grams > 0}

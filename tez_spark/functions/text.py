@@ -8,8 +8,9 @@ processors): the operations a 100TB training-data pipeline needs over a
 
 Design rules:
 - every function is a Column -> Column transform so it composes with any
-  scan and stays inside whole-stage codegen; the DuckDB oracles in
-  text_queries.py mirror the exact same arithmetic.
+  scan and stays inside whole-stage codegen (token_grams, the one
+  DataFrame -> DataFrame helper, only composes them); the DuckDB oracles
+  in text_queries.py mirror the exact same arithmetic.
 - tokenize ONCE: the `*_of` metric functions take a pre-materialized token
   array column. Catalyst has no subexpression elimination across lambda
   scopes, so deriving each metric from its own `tokens(text)` call
@@ -26,7 +27,7 @@ Design rules:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Small english/function-word list used by both language-ID and quality
@@ -72,6 +73,26 @@ def gram_hash(gram: str | Column, width: int = 16) -> Column:
     false match; at that scale switch to the full digest."""
     col = F.col(gram) if isinstance(gram, str) else gram
     return F.substring(F.md5(col.cast("binary")), 1, width)
+
+
+def token_grams(
+    df: DataFrame, length: int, *keep: str, pos: bool = False, width: int = 16
+) -> DataFrame:
+    """(*keep, [pos,] g) — one row per length-token window of df's `text`
+    column, g its gram_hash(width). THE token-gram extractor of every
+    gram consumer (decontaminate_ngram and its stream, text_dup_spans,
+    winnow fingerprints): tokens are projected in their own stage (the
+    tokenize-once rule above), documents shorter than one window are
+    dropped before the explode, and pos=True adds each window's 0-based
+    position (posexplode) for consumers that order windows."""
+    base = df.select(*keep, tokens("text").alias("_toks")).filter(
+        F.size("_toks") >= length
+    )
+    gen = F.posexplode if pos else F.explode
+    names = ("pos", "gram") if pos else ("gram",)
+    return base.select(*keep, gen(gram_windows(length)).alias(*names)).select(
+        *keep, *names[:-1], gram_hash("gram", width).alias("g")
+    )
 
 
 def char_count(text: str | Column) -> Column:

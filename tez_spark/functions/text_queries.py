@@ -169,7 +169,6 @@ WINNOW_W = 4  # grams per winnowing window
 def winnow_fingerprints(
     docs: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = WINNOW_K,
     w: int = WINNOW_W,
 ) -> DataFrame:
@@ -192,15 +191,8 @@ def winnow_fingerprints(
     are excluded by construction."""
     from pyspark.sql import Window
 
-    base = docs.select(id_col, X.tokens(text_col).alias("_toks")).filter(
-        F.size("_toks") >= k
-    )
-    grams = base.select(
-        id_col,
-        F.posexplode(X.gram_windows(k)).alias("pos", "gram"),
-    )
-    hashed = grams.select(
-        id_col, "pos", X.gram_hash("gram", width=8).alias("h")
+    hashed = X.token_grams(docs, k, id_col, pos=True, width=8).withColumnRenamed(
+        "g", "h"
     )
     win = Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, w - 1)
     n_w = Window.partitionBy(id_col)
@@ -668,8 +660,8 @@ DUP_SPAN_L = 6  # tokens per exact-substring gram
 
 
 def token_gram_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The UN-persisted tokens -> gram_windows(6) -> gram_hash explode
-    plan (doc_id, pos, g) — pure map-side codegen over the scan's
+    """The UN-persisted token_grams(6) explode plan (doc_id, pos, g) —
+    pure map-side codegen over the scan's
     natural splits (fan_out first: the fixture arrives as one split,
     and a 1-partition stream serializes every consumer's map stage —
     at 100TB the scan's natural splits make this a no-op). g is the
@@ -677,15 +669,10 @@ def token_gram_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirror); pos rides along and text_dup_spans simply ignores it."""
     from tez_spark.operators.core import fan_out
 
-    L = DUP_SPAN_L
     docs = load_table(spark, sf_dir, "documents")
-    base = fan_out(docs.select("doc_id", "text")).select(
-        "doc_id", X.tokens("text").alias("_toks")
-    ).filter(F.size("_toks") >= L)
-    return base.select(
-        "doc_id",
-        F.posexplode(X.gram_windows(L)).alias("pos", "gram"),
-    ).select("doc_id", "pos", X.gram_hash("gram").alias("g"))
+    return X.token_grams(
+        fan_out(docs.select("doc_id", "text")), DUP_SPAN_L, "doc_id", pos=True
+    )
 
 
 def dup_token_gram_set(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -137,6 +137,17 @@ def filter_rows(df: DataFrame, cond: Column | str) -> DataFrame:
     return df.filter(cond)
 
 
+def new_batch(id_col: str) -> Column:
+    """The daily-ingest split, defined once: True for the ~10% new batch
+    (md5(id) hex prefix >= 'e6', 26/256), False for the ~90% corpus —
+    membership is a pure function of the id, stable across runs,
+    partitionings and engines. Corpus sides filter on ~new_batch(...),
+    which Catalyst rewrites to the prefix < 'e6' compare. The DuckDB
+    oracles restate it in SQL as the independent truth."""
+    h = F.md5(F.encode(F.col(id_col).cast("string"), "UTF-8"))
+    return F.substring(h, 1, 2) >= "e6"
+
+
 def flat_map_tokens(
     df: DataFrame, text_col: str, out_col: str = "token", pattern: str = " "
 ) -> DataFrame:

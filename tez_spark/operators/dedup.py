@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tez_spark.functions.text import tokens
-from tez_spark.operators.core import bounded_sort
+from tez_spark.operators.core import bounded_sort, new_batch
 from tez_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
@@ -136,65 +136,10 @@ def _pair_jaccard(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def pair_jaccard_at(sh: DataFrame, t: float, id_col: str = "doc_id") -> DataFrame:
-    """EXACT (da, db, j) for every pair with Jaccard >= t, prefix-filtered
-    (Bayardo all-pairs / SSJoin): under any global shingle order,
-    J(A,B) >= t implies |A∩B| >= ceil(t·|A|), so B must hit one of A's
-    first |A| - ceil(t·|A|) + 1 shingles (and symmetrically) — joining
-    only those ~(1-t)·n prefix shingles per doc, with zero recall loss;
-    exact verification then scores candidates only. Same output as the
-    naive all-pairs join (asserted in tests/test_dedup_property.py).
-
-    WHEN TO USE: sparse corpora, where most docs have no near-dup — the
-    typical web-scale case — so the candidate set is small and the
-    pruned join avoids scoring the co-shingle cross product. On the
-    DENSE templated fixtures it measured ~5x SLOWER than the naive join
-    (the prefix shingles are each doc's minimum hashes, which template
-    siblings share, so candidates ≈ all template pairs and the
-    verification machinery outweighs the pruning); the declared queries
-    therefore stay on the naive path, which is also the DuckDB oracle
-    shape.
-
-    The prefix ranking window partitions by doc id — partition-local
-    over the co-partitioned persisted shingle table, no extra shuffle."""
-    from pyspark.sql import Window
-
-    n_w = Window.partitionBy(id_col)
-    rn_w = n_w.orderBy("sh")
-    ranked = sh.select(
-        id_col,
-        "sh",
-        F.row_number().over(rn_w).alias("_rn"),
-        F.count(F.lit(1)).over(n_w).alias("_n"),
-    )
-    prefix = ranked.filter(
-        F.col("_rn") <= F.col("_n") - F.ceil(F.lit(t) * F.col("_n")) + 1
-    )
-    a = prefix.select(F.col(id_col).alias("da"), "sh")
-    b = prefix.select(F.col(id_col).alias("db"), "sh")
-    from tez_spark.operators.core import tracked_persist
-
-    # verification consumes the candidate set twice (the pair join on da
-    # + the b-side id filter) — persist so the prefix join runs once.
-    cand = tracked_persist(
-        a.join(b, "sh")
-        .filter(F.col("da") < F.col("db"))
-        .select("da", "db")
-        .distinct()
-    )
-    # broadcast_small=False: on dense corpora the prefix-filtered
-    # candidate set can approach all co-shingled pairs — let AQE size the
-    # joins instead of forcing a driver-side collect via broadcast hints.
-    return _verify_pairs(
-        cand, sh, id_col=id_col, broadcast_small=False
-    ).filter(F.col("j") >= t)
-
-
 def _verify_pairs(
     cand: DataFrame,
     sh: DataFrame,
     id_col: str = "doc_id",
-    broadcast_small: bool = True,
     sh_b: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard for candidate pairs only — the LSH verification stage.
@@ -213,13 +158,13 @@ def _verify_pairs(
     batch (r5 verdict: the ~30-stage floor WAS the residual). Bytes
     moved are unchanged: O(candidate docs × doc size) either way.
 
-    broadcast_small: when the candidate set is known to be pruned-small
-    (the MinHash-LSH path), broadcast the candidate-bounded sides
-    explicitly rather than letting AQE discover it one shuffle-stage at
-    a time. Callers whose candidate set can be LARGE (prefix filtering
-    on a dense corpus) must pass False — an explicit broadcast hint
-    overrides size thresholds and would collect the whole candidate
-    table to the driver.
+    Every caller's candidate set is pruned-small (LSH bands, winnow
+    fingerprints, the incremental batch), so the candidate-bounded sides
+    are broadcast explicitly rather than left for AQE to discover one
+    shuffle stage at a time. A caller whose candidate set can be LARGE
+    must not use this shape: an explicit broadcast hint overrides size
+    thresholds and would collect the whole candidate table to the
+    driver.
 
     sh_b: when the caller KNOWS every db comes from a smaller table (the
     incremental path: db is always a new-batch doc), pass that table so
@@ -234,34 +179,28 @@ def _verify_pairs(
     fewer) and a wash on the other callers (six-query bench total 6.74
     vs 7.07 s, per-query moves within noise). Full table in PERF.md
     round 11. Keep this shape; re-measure before re-attempting."""
-    maybe_b = F.broadcast if broadcast_small else (lambda df: df)
 
     def doc_sets(table: DataFrame, ids: DataFrame, out: str) -> DataFrame:
         return (
-            table.join(maybe_b(ids), id_col, "left_semi")
+            table.join(F.broadcast(ids), id_col, "left_semi")
             .groupBy(id_col)
             .agg(F.collect_set("sh").alias(out))
         )
 
-    # In the broadcast regime, no .distinct() on the id projections: the
-    # broadcast hash relation the left_semi builds is a SET, so duplicate
-    # ids collapse in the build anyway — the distinct added one exchange
-    # + one AQE job per side for nothing (r7 stage-floor profile:
-    # dedup_incremental's wall is driver orchestration, not bytes; see
-    # PERF.md round 7). In the shuffle regime (broadcast_small=False) the
-    # distinct stays: there the dup ids would travel the exchange.
-    maybe_distinct = (lambda df: df) if broadcast_small else (lambda df: df.distinct())
-    a_sets = doc_sets(
-        sh, maybe_distinct(cand.select(F.col("da").alias(id_col))), "sha"
-    )
+    # No .distinct() on the id projections: the broadcast hash relation
+    # the left_semi builds is a SET, so duplicate ids collapse in the
+    # build anyway — the distinct added one exchange + one AQE job per
+    # side for nothing (r7 stage-floor profile: dedup_incremental's wall
+    # is driver orchestration, not bytes; see PERF.md round 7).
+    a_sets = doc_sets(sh, cand.select(F.col("da").alias(id_col)), "sha")
     b_sets = doc_sets(
         sh_b if sh_b is not None else sh,
-        maybe_distinct(cand.select(F.col("db").alias(id_col))),
+        cand.select(F.col("db").alias(id_col)),
         "shb",
     )
     return (
-        cand.join(maybe_b(a_sets.select(F.col(id_col).alias("da"), "sha")), "da")
-        .join(maybe_b(b_sets.select(F.col(id_col).alias("db"), "shb")), "db")
+        cand.join(F.broadcast(a_sets.select(F.col(id_col).alias("da"), "sha")), "da")
+        .join(F.broadcast(b_sets.select(F.col(id_col).alias("db"), "shb")), "db")
         .withColumn("_i", F.size(F.array_intersect("sha", "shb")))
         .select(
             "da",
@@ -299,11 +238,12 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All near-dup pairs with exact 3-gram Jaccard ≥ 0.8 (naive
-    all-pairs join — measured faster than prefix filtering on these
-    dense fixtures; see pair_jaccard_at for the sparse-corpus
-    alternative). The shingle table is the session-memoized shared
-    artifact — "materialize the shingle table once", the standard
-    pipeline shape, now shared across the seven consumers."""
+    all-pairs join — measured ~5x faster than prefix filtering on these
+    dense fixtures; PERF.md "Prefix-filtered Jaccard (deleted)" keeps
+    that A/B and the sparse-corpus case for it). The shingle table is
+    the session-memoized shared artifact — "materialize the shingle
+    table once", the standard pipeline shape, now shared across the
+    seven consumers."""
     sh = shingle_table(spark, sf_dir)
     return bounded_sort(_pair_jaccard(sh).filter(F.col("j") >= 0.8), "da", "db")
 
@@ -394,17 +334,13 @@ def band_signatures(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def candidates_from_bands(
-    banded: DataFrame, id_col: str = "doc_id", dedupe: bool = True
-) -> DataFrame:
+def candidates_from_bands(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Bucket equijoin over a (persisted) banded-signature table ->
     distinct candidate pairs. Shuffle key (band, sig) is ~uniform (hash
-    values), so no skew. dedupe=False returns the raw (multi-band) pair
-    stream for callers that fold several candidate branches into ONE
-    union-wide distinct (q_dedup_incremental)."""
+    values), so no skew."""
     a = banded.alias("a")
     b = banded.alias("b")
-    pairs = (
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -412,19 +348,8 @@ def candidates_from_bands(
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
         .select(F.col(f"a.{id_col}").alias("da"), F.col(f"b.{id_col}").alias("db"))
+        .distinct()
     )
-    return pairs.distinct() if dedupe else pairs
-
-
-def lsh_candidates(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Band signatures -> bucket equijoin -> distinct candidate pairs.
-    The banded table is persisted (the self-join would otherwise recompute
-    the full 128-hash signature aggregation for BOTH sides); (id, band,
-    sig) is tiny — BANDS rows per doc. Tracked for release between
-    registry runs."""
-    from tez_spark.operators.core import tracked_persist
-
-    return candidates_from_bands(tracked_persist(band_signatures(sig, id_col)), id_col)
 
 
 def lsh_candidate_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -645,8 +570,7 @@ def corpus_artifacts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
 
     def corpus_docs() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
-        h = F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8"))
-        return docs.filter(F.substring(h, 1, 2) < "e6")
+        return docs.filter(~new_batch("doc_id"))
 
     sh = shared_artifact(
         spark,
@@ -669,58 +593,80 @@ def corpus_artifacts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
     return sh, bands
 
 
+def incremental_pairs(
+    store_sh: DataFrame,
+    store_bands: DataFrame,
+    batch_sh: DataFrame,
+    batch_bands: DataFrame,
+) -> DataFrame:
+    """Verified near-dup pairs (da, db, j) at Jaccard >= 0.8 of a NEW
+    batch against a kept signature store — the one incremental-dedup
+    step: the batch operator applied to the delta against kept state.
+    q_dedup_incremental calls it with the seed split as the batch and
+    the memoized corpus artifacts as the store; the ingest stream
+    (streaming/ingest.maintain_dedup) with one micro-batch's written
+    signature files against the store's earlier files. The store must
+    not hold the batch's own docs (a doc never pairs with itself).
+
+    Candidates are the batch-bands × store-bands bucket equijoin
+    (new-vs-kept — never kept-vs-kept) unioned with the batch's own band
+    self-join (new-vs-new), then exact Jaccard verification on
+    candidates only. Orientation: store×batch pairs as (da=store doc,
+    db=batch doc) regardless of id order; within-batch pairs as da < db.
+
+    One distinct per branch: the branches cannot share a pair (the store
+    holds no batch doc), so their union needs no distinct of its own.
+    The r7 shape folded both branches into one union-wide distinct;
+    with the stream on this step it measured slower per micro-batch
+    (ingest op_p50 +10%, 5 of 20 pairs faster) — PERF.md "One
+    incremental-dedup step". Persisted: verification reads the
+    candidates three times."""
+    from tez_spark.operators.core import tracked_persist
+
+    cross = (
+        batch_bands.alias("b")
+        .join(
+            store_bands.alias("c"),
+            (F.col("b.band") == F.col("c.band")) & (F.col("b.sig") == F.col("c.sig")),
+        )
+        .select(F.col("c.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
+        .distinct()
+    )
+    cand = tracked_persist(cross.unionByName(candidates_from_bands(batch_bands)))
+    return _verify_pairs(
+        cand, store_sh.unionByName(batch_sh), sh_b=batch_sh
+    ).filter(F.col("j") >= 0.8)
+
+
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental cross-snapshot dedup — the operation a daily 100TB
     ingest actually runs: near-dup report for a NEW batch (the ~10% of
-    docs with md5(doc_id) >= 'e6' — the same content-independent split as
+    docs in new_batch — the same content-independent split as
     train_split) against the persisted corpus (the other ~90%), plus
     within-batch dedup, WITHOUT ever re-processing the corpus.
 
     Plan: the corpus side contributes only its persisted shingle + band
     tables (corpus_artifacts — at scale a parquet signature store
     maintained across snapshots); the batch is shingled/signed fresh
-    (it is new data). Candidates are the batch-bands × corpus-bands
-    bucket equijoin (new-vs-all — never all-vs-all) unioned with the
-    batch's own band self-join (new-vs-new), then exact Jaccard
-    verification on candidates only. Output orientation: cross-split
-    pairs as (da=corpus doc, db=batch doc) regardless of id order;
-    within-batch pairs as da < db. Declared against the exact all-pairs
-    oracle restricted to pairs touching the batch (corpus×corpus pairs
-    were deduped when earlier snapshots merged — not this job's output);
-    the same ~5e-8 LSH miss bound as dedup_minhash_lsh applies."""
+    (it is new data); incremental_pairs joins, verifies and orients.
+    Declared against the exact all-pairs oracle restricted to pairs
+    touching the batch (corpus×corpus pairs were deduped when earlier
+    snapshots merged — not this job's output); the same ~5e-8 LSH miss
+    bound as dedup_minhash_lsh applies."""
     from tez_spark.operators.core import tracked_persist
 
     corpus_sh, corpus_bands = corpus_artifacts(spark, sf_dir)
 
     docs = load_table(spark, sf_dir, "documents")
-    h = F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8"))
-    batch_docs = docs.filter(F.substring(h, 1, 2) >= "e6")
-    batch_sh = tracked_persist(shingles(batch_docs, "doc_id", "text", n=3))
-    # Both persists below are load-bearing (r7 profile, A/B-measured):
-    # the un-persisted form re-runs the minhash aggregation and band
-    # joins inside every broadcast-subquery consumer — AQE exchange
-    # reuse does NOT span those subtrees — and measured >=2x slower
-    # (7.9s vs 3.8s idle min at sf0.1).
-    batch_bands = tracked_persist(band_signatures(minhash_signatures(batch_sh)))
-
-    cross = (
-        batch_bands.alias("b")
-        .join(
-            corpus_bands.alias("c"),
-            (F.col("b.band") == F.col("c.band")) & (F.col("b.sig") == F.col("c.sig")),
-        )
-        .select(F.col("c.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
+    batch_sh = tracked_persist(
+        shingles(docs.filter(new_batch("doc_id")), "doc_id", "text", n=3)
     )
-    within = candidates_from_bands(batch_bands, dedupe=False)
-    # ONE union-wide distinct, not one per branch (r7 flip of the r6
-    # shape): the branches' pre-distinct pair streams carry the same
-    # rows either way, so a single exchange over the (narrow) union
-    # moves identical bytes through HALF the distinct stages/AQE jobs —
-    # and the profile showed this query's floor is stage orchestration,
-    # not shuffle bytes.
-    cand = tracked_persist(cross.unionByName(within).distinct())
-
-    sh_all = corpus_sh.unionByName(batch_sh)
+    # Both persists are load-bearing (r7 profile, A/B-measured): the
+    # un-persisted form re-runs the minhash aggregation and band joins
+    # inside every broadcast-subquery consumer — AQE exchange reuse does
+    # NOT span those subtrees — and measured >=2x slower (7.9s vs 3.8s
+    # idle min at sf0.1).
+    batch_bands = tracked_persist(band_signatures(minhash_signatures(batch_sh)))
     # bounded_sort (repartition(1)), not coalesce(1): the verified
     # report is candidate-bounded (hundreds of rows at any SF here) so
     # it skips orderBy's sampling job either way, but coalesce is a
@@ -731,7 +677,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # closed before the section was written) — the exchange moves
     # hundreds of rows. At true 100TB output sizes swap to orderBy.
     return bounded_sort(
-        _verify_pairs(cand, sh_all, sh_b=batch_sh).filter(F.col("j") >= 0.8),
+        incremental_pairs(corpus_sh, corpus_bands, batch_sh, batch_bands),
         "da",
         "db",
     )

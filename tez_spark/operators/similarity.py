@@ -31,12 +31,12 @@ from __future__ import annotations
 from functools import reduce
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tez_spark.functions.vectors import as_double
 from tez_spark.sources.catalog import load_table, read_parquet_cached
-from tez_spark.operators.core import bounded_sort
+from tez_spark.operators.core import bounded_sort, new_batch
 
 K = 5
 N_QUERIES = 10  # query set = vec_id < 10, fixed for oracle reproducibility
@@ -748,24 +748,17 @@ def cross_pairs_cosine(
     )
 
 
-def _new_batch() -> Column:
-    """The daily-ingest split, defined once: True for the ~10% new batch
-    (md5(vec_id) prefix >= 'e6'), False for the ~90% corpus — the split
-    embedding_incremental's and ann_incremental's oracles reproduce in
-    DuckDB."""
-    h = F.md5(F.encode(F.col("vec_id").cast("string"), "UTF-8"))
-    return F.substring(h, 1, 2) >= "e6"
-
-
 def _incremental_split(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(corpus, new batch) of an embeddings table by _new_batch."""
-    return emb.filter(~_new_batch()), emb.filter(_new_batch())
+    """(corpus, new batch) of an embeddings table by core.new_batch —
+    the split embedding_incremental's and ann_incremental's oracles
+    reproduce in DuckDB."""
+    return emb.filter(~new_batch("vec_id")), emb.filter(new_batch("vec_id"))
 
 
 def q_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental embedding dedup — the semantic mirror of
     dedup_incremental: cosine ≥ 0.45 near-dup report for the ~10% NEW
-    batch of vectors (_new_batch, the standard split) against the ~90%
+    batch of vectors (new_batch, the standard split) against the ~90%
     corpus, plus within-batch pairs; corpus × corpus is never scored
     (those pairs were resolved when earlier snapshots merged).
 
@@ -781,7 +774,7 @@ def q_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serialized scalar count() driver jobs per build.
     split_counts = {
         r["_split"]: r["n"]
-        for r in emb.groupBy(_new_batch().alias("_split"))
+        for r in emb.groupBy(new_batch("vec_id").alias("_split"))
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
@@ -1128,7 +1121,7 @@ def ann_ivf_probe_index(
 
 def ann_incremental_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily-ingest ANN neighbor rows: the new ~10% batch of vectors
-    (_new_batch) top-5-probed against a PERSISTED IVF index built over
+    (new_batch) top-5-probed against a PERSISTED IVF index built over
     the ~90% corpus — the sublinear scale twin of embedding_incremental
     (which scores the batch × corpus product exactly). The index is
     built once per content key (ensure_ivf_index: an on-disk memo under
@@ -1316,7 +1309,7 @@ def ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
 
     fp = path_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     key = (
-        os.path.abspath(sf_dir), fp, str(_new_batch()),
+        os.path.abspath(sf_dir), fp, str(new_batch("vec_id")),
         IVF_CELLS, IVF_KMEANS_SAMPLE, IVF_KMEANS_ITERS,
     )
     tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tez_spark.functions import text as X
-from tez_spark.operators.core import bounded_sort
+from tez_spark.operators.core import bounded_sort, new_batch
 
 QUALITY_MIN = 0.68
 TOKENS_MIN = 30
@@ -114,10 +114,9 @@ def q_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tez_spark.sources.catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    h = F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8"))
     out = (
         docs.select(
-            F.when(F.substring(h, 1, 2) < "e6", "train")
+            F.when(~new_batch("doc_id"), "train")
             .otherwise("holdout")
             .alias("split"),
             F.size(tokens("text")).cast("long").alias("_n_tokens"),
@@ -459,8 +458,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tez_spark.sources.catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    h = F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8"))
-    split = F.when(F.substring(h, 1, 2) < "e6", "train").otherwise("holdout")
+    split = F.when(~new_batch("doc_id"), "train").otherwise("holdout")
     tagged = docs.select("doc_id", "source", split.alias("split"))
     # winnow fingerprints are the shared artifact; the split tag join is
     # per-query (it is a map-side hash on doc_id).
@@ -795,18 +793,12 @@ def q_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tez_spark.sources.catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    L = DECONTAM_NGRAM_L
-    h = F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8"))
-    base = docs.select(
-        "doc_id",
-        (F.substring(h, 1, 2) >= "e6").alias("is_hold"),
-        X.tokens("text").alias("_toks"),
-    ).filter(F.size("_toks") >= L)
-    grams = base.select(
+    grams = X.token_grams(
+        docs.select("doc_id", new_batch("doc_id").alias("is_hold"), "text"),
+        DECONTAM_NGRAM_L,
         "doc_id",
         "is_hold",
-        F.explode(X.gram_windows(L)).alias("gram"),
-    ).select("doc_id", "is_hold", X.gram_hash("gram").alias("g"))
+    )
     train_g = (
         grams.filter(~F.col("is_hold")).select("g").distinct()
         .withColumn("_m", F.lit(1))
@@ -875,8 +867,7 @@ def q_decontaminate_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tez_spark.functions.text_queries import char_gram_plan
 
     grams = char_gram_plan(spark, sf_dir).select("doc_id", "g")
-    h = F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8"))
-    grams = grams.withColumn("is_hold", F.substring(h, 1, 2) >= "e6")
+    grams = grams.withColumn("is_hold", new_batch("doc_id"))
     shared_g = (
         grams.groupBy("g")
         .agg(

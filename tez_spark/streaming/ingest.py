@@ -4,9 +4,12 @@ New documents arrive as a stream; every micro-batch is deduped against a
 PERSISTED signature store (corpus shingles + minhash band table) that
 grows as batches commit, so each document is checked against the corpus
 AND every earlier-ingested document, exactly once, without ever
-re-shingling history. This is the streaming twin of
-operators/dedup.q_dedup_incremental the way maintain_rollup is the
-streaming twin of the hourly rollup.
+re-shingling history. Each micro-batch runs the SAME step as the
+registry query operators/dedup.q_dedup_incremental —
+dedup.incremental_pairs, the batch operator applied to the delta against
+the kept store — and maintain_decontaminate extracts grams with the same
+functions/text.token_grams as q_decontaminate_ngram, so a stream and its
+registry query differ only in where the store and the batch come from.
 
 Why foreachBatch: per-document signature aggregation + candidate band
 join + exact verification is a batch composition per micro-batch (the
@@ -37,11 +40,13 @@ def maintain_dedup(
     store_dir: str,
     stream_dir: str,
     report,
-    threshold: float = 0.8,
     compact_every: int | None = None,
 ) -> None:
     """Run the streaming ingest-dedup pipeline over a (finite) file
-    stream of document batches.
+    stream of document batches: each micro-batch's signatures are
+    written to the store, then dedup.incremental_pairs (the step
+    q_dedup_incremental runs) pairs them at Jaccard >= 0.8 against the
+    store's earlier files.
 
     - `store_dir`: parquet signature store; seeded here with the corpus
       split's shingles + bands (in production: carried over from the
@@ -49,8 +54,9 @@ def maintain_dedup(
     - `stream_dir`: directory of parquet files, one micro-batch each
       (maxFilesPerTrigger=1).
     - `report(pairs_df, batch_id)`: receives each batch's near-dup pairs
-      (da = already-ingested doc, db = newly arrived doc, j) — the
-      quarantine/drop decision hook. `pairs_df` is planned over the
+      (da = already-ingested doc, db = newly arrived doc, j; two docs of
+      one micro-batch pair as da < db) — the quarantine/drop decision
+      hook. `pairs_df` is planned over the
       batch's shingle and band subdirs, written BEFORE the report, so
       its tasks read signature files rather than carry the minhash
       lineage (a Tez consumer reads its producer's materialized output).
@@ -61,11 +67,10 @@ def maintain_dedup(
       read stays O(compact_every) instead of O(total batches). None
       leaves compaction to an out-of-band compact_dedup_store call.
     """
-    from tez_spark.operators.core import tracked_persist
+    from tez_spark.operators.core import new_batch
     from tez_spark.operators.dedup import (
-        _verify_pairs,
         band_signatures,
-        candidates_from_bands,
+        incremental_pairs,
         minhash_signatures,
         shingles,
     )
@@ -75,9 +80,7 @@ def maintain_dedup(
     band_store = os.path.join(store_dir, "bands")
     _open_store(store_dir, _DEDUP)
     if not os.path.exists(os.path.join(band_store, "seed", "_SUCCESS")):
-        docs = load_table(spark, sf_dir, "documents")
-        h = F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8"))
-        corpus = docs.filter(F.substring(h, 1, 2) < "e6")
+        corpus = load_table(spark, sf_dir, "documents").filter(~new_batch("doc_id"))
         corpus_sh = shingles(corpus, "doc_id", "text", n=3)
         corpus_sh.write.mode("overwrite").parquet(os.path.join(sh_store, "seed"))
         band_signatures(
@@ -87,9 +90,8 @@ def maintain_dedup(
     def step(batch_df: DataFrame, batch_id: int) -> None:
         # the written signatures, not persisted frames: a cache miss
         # would recompute the 128-term minhash aggregate and the 32-band
-        # array inside every reading task. A doc never pairs with
-        # itself: the cross join reads the store without this batch's
-        # subdir, and within-batch pairs come from the da<db self-join.
+        # array inside every reading task. The store is read without
+        # this batch's subdir, so a doc never pairs with itself.
         micro_sh = _write_batch(
             shingles(batch_df, "doc_id", "text", n=3), sh_store, batch_id
         )
@@ -100,23 +102,10 @@ def maintain_dedup(
             spark, band_store, batch_id, micro_bands.schema
         )
         store_sh = _read_store(spark, sh_store, batch_id, micro_sh.schema)
-        cross = (
-            micro_bands.alias("b")
-            .join(
-                store_bands.alias("c"),
-                (F.col("b.band") == F.col("c.band"))
-                & (F.col("b.sig") == F.col("c.sig")),
-            )
-            .select(F.col("c.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-            .distinct()
+        report(
+            incremental_pairs(store_sh, store_bands, micro_sh, micro_bands),
+            batch_id,
         )
-        within = candidates_from_bands(micro_bands)
-        cand = tracked_persist(cross.unionByName(within))
-        sh_all = store_sh.unionByName(micro_sh)
-        pairs = _verify_pairs(cand, sh_all, sh_b=micro_sh).filter(
-            F.col("j") >= threshold
-        )
-        report(pairs, batch_id)
 
     _stream_into_store(
         spark, store_dir, stream_dir, "doc_id long, text string", _DEDUP,
@@ -223,9 +212,10 @@ def maintain_decontaminate(
     compact_every: int | None = None,
 ) -> None:
     """Streaming eval-set protection (r12) — the continuous form of
-    q_decontaminate_ngram, and the decontamination twin of
-    maintain_dedup: TRAIN documents arrive as a stream, and each
-    micro-batch's verbatim 13-gram hashes are checked against the FIXED
+    q_decontaminate_ngram, on the same store driver as maintain_dedup:
+    TRAIN documents arrive as a stream, and each micro-batch's verbatim
+    13-gram hashes (functions/text.token_grams, the extractor
+    q_decontaminate_ngram uses) are checked against the FIXED
     holdout gram table, reporting per-holdout-doc contamination
     INCREMENTS for grams never seen in any earlier batch. Summed over a
     finished stream, the increments equal the batch query's
@@ -248,29 +238,21 @@ def maintain_decontaminate(
     `report(inc_df, batch_id)` receives (doc_id, n_new_shared_grams)
     rows — holdout docs contaminated by grams first seen in this batch.
     """
-    from tez_spark.functions import text as X
-    from tez_spark.plans.curation import DECONTAM_NGRAM_L as L
+    from tez_spark.functions.text import token_grams
+    from tez_spark.operators.core import new_batch
+    from tez_spark.plans.curation import DECONTAM_NGRAM_L
     from tez_spark.sources.catalog import load_table
 
     gram_store = os.path.join(store_dir, "grams")
     hold_path = os.path.join(store_dir, "holdout_grams")
     _open_store(store_dir, _DECONTAMINATE)
 
-    def doc_grams(df: DataFrame) -> DataFrame:
-        base = df.select(
-            "doc_id", X.tokens("text").alias("_toks")
-        ).filter(F.size("_toks") >= L)
-        return base.select(
-            "doc_id", F.explode(X.gram_windows(L)).alias("gram")
-        ).select("doc_id", X.gram_hash("gram").alias("g"))
-
     if not os.path.exists(os.path.join(gram_store, "seed", "_SUCCESS")):
-        docs = load_table(spark, sf_dir, "documents")
-        h = F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8"))
-        hold = docs.filter(F.substring(h, 1, 2) >= "e6")
+        hold = load_table(spark, sf_dir, "documents").filter(new_batch("doc_id"))
         # gram INSTANCES (doc_id, g): the per-doc increment counts every
         # window instance that matches, exactly like the batch query
-        doc_grams(hold).write.mode("overwrite").parquet(hold_path)
+        hold_grams = token_grams(hold, DECONTAM_NGRAM_L, "doc_id")
+        hold_grams.write.mode("overwrite").parquet(hold_path)
         # empty seed so the store glob always reads (schema-only)
         spark.createDataFrame([], "g string").write.mode("overwrite").parquet(
             os.path.join(gram_store, "seed")
@@ -279,8 +261,7 @@ def maintain_decontaminate(
     def step(batch_df: DataFrame, batch_id: int) -> None:
         seen = _read_store(spark, gram_store, batch_id, "g string")
         new_g = _write_batch(
-            doc_grams(batch_df)
-            .select("g")
+            token_grams(batch_df, DECONTAM_NGRAM_L)
             .distinct()
             .join(seen, "g", "left_anti"),
             gram_store,

@@ -7,7 +7,10 @@ reads (PLANS.md). No query is executed; only plans are built.
 
 python tools/gen_plans.py --dump <query> [<query> ...] instead prints each
 named query's explain("formatted") at $SPARK_GRAFT_SF_DIR (default: SF
-below) to stdout and writes nothing.
+below) to stdout and writes nothing. Expression ids (#123), plan ids and
+the process-wide lambda-variable counter (x_7) are stripped, so two builds
+of the same plan print the same text and a before/after diff of a query
+whose plan did not move is empty.
 """
 import os, re, sys
 sys.path.insert(0, ".")
@@ -23,8 +26,9 @@ if sys.argv[1:2] == ["--dump"]:
     for name in sys.argv[2:]:
         df = qs[name](spark, os.environ.get("SPARK_GRAFT_SF_DIR", SF))
         print(f"== {name} ==")
-        print(df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"))
+        text = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+        print(re.sub(r"#\d+|(?<=plan_id=)\d+|(?<=lambda x_)\d+", "", text))
     spark.stop()
     sys.exit(0)
 
